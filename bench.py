@@ -18,10 +18,11 @@ import time
 
 
 # Steady-state is the DEFAULT from round 5 (set SPARK_GRAFT_BENCH_STEADY=0
-# to opt out): tools/bench_order_probe.py proved a 1.5-2x first-run
-# session-position penalty that lands on whichever queries sit early in
-# registry order, so rotating the registry between rounds made headline
-# per-query numbers incomparable (BENCH_NOTES.md). The preflight pass
+# to opt out): a session-order probe (BENCH_NOTES.md, "session-position
+# artifact") proved a 1.5-2x first-run session-position penalty that
+# lands on whichever queries sit early in registry order, so rotating
+# the registry between rounds made headline per-query numbers
+# incomparable. The preflight pass
 # removes the artifact; the timed pass measures steady-state plans.
 # "" counts as opt-out: the pre-round-5 parser treated an exported-but-
 # empty variable as OFF, and anyone who relied on that must not be

@@ -7,7 +7,7 @@ certified through one of five sound mechanisms:
 1. exactly-once tx landing (``streaming_tx_exactly_once_census``'s
    recipe; topic frequencies / windowed counts / keep-last state) —
    each micro-batch lands via txn-keyed ``tx_append_txn``, the
-   restart and forced-replay gates must commit nothing, and the
+   restart and forced-replay checks must commit nothing, and the
    landed census hashes against the original parquet;
 2. batch-split-independent folds adopting their batch twins' oracles
    (retractable agg: additive; CMS: linear; LC: idempotent bit_or;
@@ -67,9 +67,9 @@ def q_streaming_topic_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame
     via txn-keyed ``tx_append_txn`` before the last-wins rollup is read
     — so the per-topic census hashes against DuckDB over the original
     parquet, and a lost batch, doubled batch, or watermark drop breaks
-    the driver gate. The restart + forced-replay certification arms run
-    in tests/test_streaming.py (``gate=True``), not per execution
-    (VERDICT r11 order #1)."""
+    the oracle hash. The restart + forced-replay certification runs in
+    ``_certify_exactly_once`` (tests/test_streaming.py), not per
+    execution."""
     return run_topic_frequencies(spark, sf_dir)
 
 
@@ -92,16 +92,15 @@ def q_streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL-ORACLE watermarked tumbling windows (upgraded from
     rows-only, VERDICT r10 order #1): append mode emits each
     watermark-closed window exactly once into a txn-landed tx table
-    (restart + forced-replay certification arms in
-    tests/test_streaming.py via ``gate=True`` — VERDICT r11 order #1;
-    the declared query drains once). The oracle states the emission
-    rule in closed form: a 1-hour window emits iff its end is at or
-    before (max event time − 10-minute delay) — the final watermark of
-    a drained bounded stream (boundary pinned empirically: end == wm
-    emits; Spark's ms-flooring of the watermark is unobservable at
-    second-aligned window ends). Late-data drops cannot occur: the one
-    staged source file makes batch 0 the only data batch, and batch
-    0 runs at watermark 0."""
+    (restart + forced-replay certification in ``_certify_exactly_once``
+    (tests/test_streaming.py); the declared query drains once). The
+    oracle states the emission rule in closed form: a 1-hour window
+    emits iff its end is at or before (max event time − 10-minute delay)
+    — the final watermark of a drained bounded stream (boundary pinned
+    empirically: end == wm emits; Spark's ms-flooring of the watermark
+    is unobservable at second-aligned window ends). Late-data drops
+    cannot occur: the one staged source file makes batch 0 the only data
+    batch, and batch 0 runs at watermark 0."""
     return run_windowed_counts(spark, sf_dir)
 
 
@@ -128,14 +127,13 @@ def q_streaming_keep_last_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     VERDICT r10 order #1): ``applyInPandasWithState`` per-user last-N
     tail (records[-n:], memory.py:125, as managed streaming state),
     per-batch state landed in a txn-keyed tx table, last-wins per user
-    by batch id (restart + forced-replay certification arms in
-    tests/test_streaming.py via ``gate=True`` — VERDICT r11 order #1).
-    The oracle is
+    by batch id (restart + forced-replay certification in
+    ``_certify_exactly_once`` (tests/test_streaming.py)). The oracle is
     the closed-form tail: within the single data batch the operator
     sorts by (ts_us, event_id), so the landed tail equals the global
-    top-5-by-(ts_us, event_id) in ascending order and n_seen equals
-    the per-user row count (NULL ts sorts last ascending in pandas,
-    mirrored by NULLS FIRST under DESC in the oracle)."""
+    top-5-by-(ts_us, event_id) in ascending order and n_seen equals the
+    per-user row count (NULL ts sorts last ascending in pandas, mirrored
+    by NULLS FIRST under DESC in the oracle)."""
     return run_keep_last_state(spark, sf_dir)
 
 
@@ -487,12 +485,11 @@ def q_streaming_tx_exactly_once_census(spark: SparkSession, sf_dir: str) -> Data
     oracle: events stream-land into the transactional table log via an
     idempotent foreachBatch sink (txn id = (app, batchId) inside the
     manifest — the commit and its replay check share one atomic CAS),
-    then the landed table is censused against the oracle's census of
-    the ORIGINAL parquet, so a lost batch, doubled batch, or value
-    drift through the stream-land-read chain breaks the hash. The
-    restart + forced-replay certification arms run under ``gate=True``
-    in tests/test_streaming.py (VERDICT r11 order #1, applied to this
-    family round 12); the declared query drains once."""
+    then the landed table is censused against the oracle's census of the
+    ORIGINAL parquet, so a lost batch, doubled batch, or value drift
+    through the stream-land-read chain breaks the hash. The restart +
+    forced-replay certification runs in ``_certify_exactly_once``
+    (tests/test_streaming.py); the declared query drains once."""
     from pulsar_project_spark.streaming.pipeline import run_streaming_tx_sink
 
     return run_streaming_tx_sink(spark, sf_dir)
@@ -587,13 +584,13 @@ def q_streaming_tx_change_feed(spark: SparkSession,
     round-8 continuation): a genuine streaming run over the custom
     Python DataSource tailing the tx log's manifest chain, folding
     per-commit weighted changes into a STATE tx table via exactly-once
-    ``tx_append_txn`` (restart certification under ``gate=True`` in
-    tests/test_streaming.py — round 12). The final
+    ``tx_append_txn`` (restart certification in
+    ``_certify_exactly_once`` (tests/test_streaming.py)). The final
     census carries the SAME oracle as the batch twin
     ``tx_change_feed_census`` — sound because stream offsets are
-    manifest versions (every micro-batch is a whole (start, end]
-    commit window, so both sides of a commit net within one batch) and
-    the per-(side, type) partials are additive. This closes the chain
+    manifest versions (every micro-batch is a whole (start, end] commit
+    window, so both sides of a commit net within one batch) and the
+    per-(side, type) partials are additive. This closes the chain
     storage → stream → storage → DuckDB with a driver hash at every
     link."""
     from pulsar_project_spark.streaming.pipeline import (
@@ -636,12 +633,11 @@ def q_streaming_tx_mv_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     now column-mapping-aware, presenting every generation under the
     FINAL logical schema — and folded per micro-batch into a maintained
     aggregate tx table via exactly-once ``tx_append_txn`` (restart
-    certification under ``gate=True`` in tests/test_streaming.py —
-    round 12).
-    The final view hash-matches the oracle's direct census of the live
-    rows replayed from raw events: view(table) == fold(changes(table))
-    certified through a real stream, across a rename boundary, with
-    transactional storage on both ends."""
+    certification in ``_certify_exactly_once``
+    (tests/test_streaming.py)). The final view hash-matches the oracle's
+    direct census of the live rows replayed from raw events: view(table)
+    == fold(changes(table)) certified through a real stream, across a
+    rename boundary, with transactional storage on both ends."""
     from pulsar_project_spark.streaming.pipeline import run_streaming_tx_mv
 
     return run_streaming_tx_mv(spark, sf_dir)
@@ -664,18 +660,17 @@ WHERE n > 0
 @declare("streaming_tx_tracked_sink_census", oracle=_TX_TRACKED_SINK_SQL)
 def q_streaming_tx_tracked_sink_census(spark: SparkSession,
                                        sf_dir: str) -> DataFrame:
-    """Exactly-once streaming landing into a ROW-TRACKED tx table —
-    the second full-oracle streaming query. Beyond the exactly-once
-    census (whose per-type counts a doubled batch would break), the
-    ID-ALGEBRA row pins identity assignment itself without depending
-    on batch boundaries: ids are {0..n-1} as a multiset iff every row
-    landed exactly once AND no replay burned id range, so the oracle
-    can state sum(_rid) = n(n-1)/2 and max(_rid) = n-1 in closed form.
-    The restart + forced-replay arms (version AND row_hwm must stay
-    untouched) run under ``gate=True`` in tests/test_streaming.py
-    (round 12); the declared query drains once — the id algebra keeps
-    exactly-once hash-checkable without them. See
-    ``run_streaming_tx_tracked_sink``."""
+    """Exactly-once streaming landing into a ROW-TRACKED tx table — the
+    second full-oracle streaming query. Beyond the exactly-once census
+    (whose per-type counts a doubled batch would break), the ID-ALGEBRA
+    row pins identity assignment itself without depending on batch
+    boundaries: ids are {0..n-1} as a multiset iff every row landed
+    exactly once AND no replay burned id range, so the oracle can state
+    sum(_rid) = n(n-1)/2 and max(_rid) = n-1 in closed form. The restart
+    + forced-replay arms (version AND row_hwm must stay untouched) run
+    in ``_certify_exactly_once`` (tests/test_streaming.py); the declared
+    query drains once — the id algebra keeps exactly-once hash-checkable
+    without them. See ``run_streaming_tx_tracked_sink``."""
     from pulsar_project_spark.streaming.pipeline import (
         run_streaming_tx_tracked_sink,
     )
@@ -694,22 +689,20 @@ def _ann_ingest_sql() -> str:
 def q_streaming_ann_ingest_census(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
     """FULL-ORACLE streaming ANN ingestion (round-11 composition
-    capstone): the embedding store's WRITE PATH as a genuine
-    multi-batch stream — vectors arrive file-by-file
-    (maxFilesPerTrigger=1 over a 4-file range-split staging), each
-    micro-batch is assigned against the offline-frozen coarse
-    quantizer and PQ-encoded, and the index rows land exactly-once in
-    a tx table (txn-keyed commits; restart + forced-replay
-    certification arms in tests/test_streaming.py via ``gate=True`` —
-    VERDICT r11 order #1).
-    Sound for a hash oracle under ANY batch split: assign+encode is a
-    pure per-vector function of the frozen quantizer, and the landed
-    set is the batch union — so the census is closed-form over the
-    raw parquet. Composes the round-11 maintenance capstone
-    (`tx_ann_index_maintenance_census`, batch change-feed) with the
-    streaming surface: together they are the full lifecycle of a
-    100 TB embedding store — stream-ingest, incrementally maintain,
-    never rebuild except to verify."""
+    capstone): the embedding store's WRITE PATH as a genuine multi-batch
+    stream — vectors arrive file-by-file (maxFilesPerTrigger=1 over a
+    4-file range-split staging), each micro-batch is assigned against
+    the offline-frozen coarse quantizer and PQ-encoded, and the index
+    rows land exactly-once in a tx table (txn-keyed commits; restart +
+    forced-replay certification in ``_certify_exactly_once``
+    (tests/test_streaming.py)). Sound for a hash oracle under ANY batch
+    split: assign+encode is a pure per-vector function of the frozen
+    quantizer, and the landed set is the batch union — so the census is
+    closed-form over the raw parquet. Composes the round-11 maintenance
+    capstone (`tx_ann_index_maintenance_census`, batch change-feed) with
+    the streaming surface: together they are the full lifecycle of a 100
+    TB embedding store — stream-ingest, incrementally maintain, never
+    rebuild except to verify."""
     from pulsar_project_spark.streaming.pipeline import (
         run_streaming_ann_ingest,
     )

@@ -35,109 +35,66 @@ def declare(name: str, oracle: str | None = None):
 
 # The driver's correctness gate checks roughly the FIRST 50 registry
 # entries. Module import order alone proved fragile (appending a query
-# to a core module silently displaces later core entries), so the core
-# set is pinned BY NAME and composed from round-stamped blocks:
-# canary → never-driver-checked → new-this-round → re-certs of modules
-# changed this round after their last verdict → stalest-green refresh,
-# trimmed to exactly 50. tests/test_registry_order.py regression-gates
-# the composition, reading ONLY driver artifacts from rounds BEFORE the
-# round each block asserts (the round-5 version read the unstamped glob
-# and went red the moment CORRECTNESS_r05.json landed — VERDICT r5 #1).
-NEVER_CHECKED_R12: tuple[str, ...] = (
-    # empty: every oracle-backed query declared before round 12 has a
-    # cumulative driver-green verdict (CORRECTNESS_r01..r11 union:
-    # 281/281 oracle-backed green); the round-12 oracle UPGRADES
-    # (previously rows-only) sit in NEW_R12 instead.
-)
-
-NEW_R12: tuple[str, ...] = (
-    # round-12 oracle upgrades of the rows-only tail (VERDICT r11
-    # order #5): seeded stratified sampling re-expressed as salted-hash
-    # membership (pure function of data+seed, replayable in DuckDB),
-    # and the greedy streaming debounce chain replayed as a recursive
-    # CTE (LATERAL frontier recursion — sequential state, full hash)
+# to a core module silently displaces later core entries), so the
+# window is pinned BY NAME: exactly 50 oracle-backed names, the
+# flagship canary first (if THAT flips, the harness broke, not the
+# engine). tests/test_registry_order.py checks the structure.
+CORE_FIRST: tuple[str, ...] = (
+    "simple_rag_topk",
     "stratified_sample_by_type",
     "streaming_debounce",
-)
-
-# Rows-only window slots: NONE this round. After the round-11 rotation
-# every remaining rows-only query has a driver rows>0/`no_oracle`
-# record (CORRECTNESS_r11), and the round-12 upgrades above shrink the
-# rows-only surface to 10 — all twin-paired or replica-pinned; none
-# needs a (weaker) driver record again.
-ROWS_ONLY_R12: tuple[str, ...] = ()
-
-RECERTS_R12: tuple[str, ...] = (
-    # modules changed in round 12 after their round-11 verdict —
-    # streaming/pipeline.py + queries/streaming_ops.py (certification
-    # arms moved out of the declared path behind gate=True, VERDICT
-    # r11 order #1; optimized-write shuffle=True landings replacing the
-    # upstream-narrowing coalesce, order #3), sources/txlog.py +
-    # sources/sinks.py (the shuffle staging option; cached foreachBatch
-    # merge), queries/similarity_ops.py (rebuild-equivalence arm moved
-    # behind verify_rebuild=True), queries/sketch_ops.py (stratified-
-    # sample upgrade shares the module with the unsalted twin),
-    # operators/{kmeans,ivf,pq}.py (map-side broadcast argmin replacing
-    # the crossJoin+window per-row argmin — every trained-codebook /
-    # IVF query's plan changed, guide §2.4), and operators/clustering.py
-    # (label propagation over the edge subgraph only — all three
-    # clustering queries' final join shape changed, guide §2.2), and
-    # the round-12 continuation session's trailing-no-data-batch skip
-    # (inner stream-stream join joins topic_freq/exact_dedup — already
-    # listed — as a changed drain) — the queries on those paths:
     "streaming_stream_stream_join",
-    "streaming_topic_frequencies", "streaming_windowed_counts",
-    "streaming_keep_last_state", "streaming_ann_ingest_census",
-    "tx_ann_index_maintenance_census", "hash_stratified_sample",
-    "streaming_exact_dedup", "streaming_tx_exactly_once_census",
-    "streaming_tx_mv_census", "streaming_tx_tracked_sink_census",
+    "streaming_topic_frequencies",
+    "streaming_windowed_counts",
+    "streaming_keep_last_state",
+    "streaming_ann_ingest_census",
+    "tx_ann_index_maintenance_census",
+    "hash_stratified_sample",
+    "streaming_exact_dedup",
+    "streaming_tx_exactly_once_census",
+    "streaming_tx_mv_census",
+    "streaming_tx_tracked_sink_census",
     "streaming_tx_change_feed",
-    "pq_trained_code_assignment", "pq_trained_adc_topk",
-    "ivfpq_adc_topk", "ivfpq_rerank_topk", "pq_code_assignment",
+    "pq_trained_code_assignment",
+    "pq_trained_adc_topk",
+    "ivfpq_adc_topk",
+    "ivfpq_rerank_topk",
+    "pq_code_assignment",
     "pq_adc_topk",
-    "neardup_components", "cluster_best_representative",
+    "neardup_components",
+    "cluster_best_representative",
     "neardup_cluster_size_histogram",
+    "arg_schema_casting",
+    "arg_whitelist_projection",
+    "audio_chunk_plan",
+    "cumulative_new_users_by_day",
+    "daily_user_series_gapfilled",
+    "debounce_events_1s",
+    "equidepth_deciles_by_type",
+    "evict_min_per_type",
+    "extension_lookup_default",
+    "fenced_json_roundtrip",
+    "ivf_cell_assignment",
+    "json_props_extract",
+    "keep_last_n_per_user",
+    "keyword_score_scan",
+    "kv_lookup_miss_message",
+    "lang_sampling_weights",
+    "langid_confusion_matrix",
+    "latest_event_per_user",
+    "length_bucket_padding_stats",
+    "median_order_cents_by_priority",
+    "memory_state_snapshot",
+    "mergeable_state_rollup",
+    "microbatch_rollup",
+    "mmr_rerank_exact",
+    "salted_segment_event_counts",
+    "skew_key_census",
 )
-
-# Stalest-green refresh: the round-4-verdict cohort (the oldest
-# remaining after round 11 refreshed round 3) minus
-# hash_stratified_sample (above, re-certed as a changed-module rep) and
-# minus the 10 tail names displaced by the round-12 operator re-certs
-# (the pq/ivfpq block, the clustering trio, and the stream-stream-join
-# drain change above — changed plans outrank stale greens; the
-# displaced names, snapshot_diff_counts last, roll to round 13) —
-# 26 names.
-STALE_REFRESH_R12: tuple[str, ...] = (
-    "arg_schema_casting", "arg_whitelist_projection", "audio_chunk_plan",
-    "cumulative_new_users_by_day", "daily_user_series_gapfilled",
-    "debounce_events_1s", "equidepth_deciles_by_type",
-    "evict_min_per_type", "extension_lookup_default",
-    "fenced_json_roundtrip", "ivf_cell_assignment", "json_props_extract",
-    "keep_last_n_per_user", "keyword_score_scan",
-    "kv_lookup_miss_message", "lang_sampling_weights",
-    "langid_confusion_matrix", "latest_event_per_user",
-    "length_bucket_padding_stats", "median_order_cents_by_priority",
-    "memory_state_snapshot", "mergeable_state_rollup",
-    "microbatch_rollup", "mmr_rerank_exact",
-    "salted_segment_event_counts", "skew_key_census",
-)
-
-_CORE_BLOCKS: tuple[str, ...] = (
-    # canary: flagship, green r1-r11 — if THIS flips, the harness broke
-    "simple_rag_topk",
-    *NEVER_CHECKED_R12,
-    *NEW_R12,
-    *ROWS_ONLY_R12,
-    *RECERTS_R12,
-    *STALE_REFRESH_R12,
-)
-# ADVICE r11 #4: the [:50] trim used to silently drop overflow (and
-# silently under-fill on a miscounted block) — the window must sum to
-# EXACTLY the driver's 50 slots, loudly.
-assert len(_CORE_BLOCKS) == 50, (
-    f"CORE_FIRST blocks sum to {len(_CORE_BLOCKS)}, want exactly 50")
-assert len(set(_CORE_BLOCKS)) == 50, "duplicate name across core blocks"
-CORE_FIRST: tuple[str, ...] = _CORE_BLOCKS
+# the window must fill EXACTLY the 50 checked slots, loudly
+assert len(CORE_FIRST) == 50, (
+    f"CORE_FIRST holds {len(CORE_FIRST)} names, want exactly 50")
+assert len(set(CORE_FIRST)) == 50, "duplicate name in CORE_FIRST"
 
 
 def _reorder_core_first() -> None:

@@ -32,7 +32,7 @@ from __future__ import annotations
 
 import os
 import tempfile
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 from typing import Any
 
@@ -64,8 +64,10 @@ def events_stream(spark: SparkSession, sf_dir: str,
     # against the same checkpoint sees no new files — require the
     # staged dir to be stable across calls.
     import hashlib
+    import shutil
 
-    digest = hashlib.md5(os.path.abspath(path).encode()).hexdigest()[:12]
+    src = os.path.abspath(path)
+    digest = hashlib.md5(src.encode()).hexdigest()[:12]
     stage = os.path.join(tempfile.gettempdir(), f"events_src_{digest}")
     os.makedirs(stage, exist_ok=True)
     if os.path.isdir(path):
@@ -73,27 +75,27 @@ def events_stream(spark: SparkSession, sf_dir: str,
         # parquet part individually — the file stream does NOT descend
         # into a symlinked subdirectory (probed round 12), and per-file
         # links are what let maxFilesPerTrigger split batches
-        # prune links whose target is gone (a cleaned-up tmp corpus that
-        # hashes to the same stage dir would otherwise leave dangling or
-        # stale links tripping later reads — ADVICE r12), then (re)link
-        # with lexists: os.path.exists is False for a DANGLING symlink,
-        # so exists-guarded symlink would raise FileExistsError
-        wanted = {p for p in os.listdir(path) if p.endswith(".parquet")}
-        for existing in os.listdir(stage):
-            lk = os.path.join(stage, existing)
-            if existing not in wanted or not os.path.exists(lk):
-                os.unlink(lk)
-        for part in sorted(wanted):
-            link = os.path.join(stage, part)
-            if not os.path.lexists(link):
-                os.symlink(os.path.join(os.path.abspath(path), part),
-                           link)
+        wanted = {p: os.path.join(src, p)
+                  for p in os.listdir(path) if p.endswith(".parquet")}
     else:
-        link = os.path.join(stage, "events.parquet")
-        if os.path.lexists(link) and not os.path.exists(link):
-            os.unlink(link)  # dangling link from a deleted prior target
+        wanted = {"events.parquet": src}
+    # one prune pass for both shapes: a source that changed shape at
+    # the same path (directory <-> file) hashes to the same stage dir,
+    # so every entry that is not a wanted, live link to its wanted
+    # target would feed the stream stale or dangling rows
+    for existing in os.listdir(stage):
+        lk = os.path.join(stage, existing)
+        if (os.path.islink(lk) and os.path.exists(lk)
+                and os.readlink(lk) == wanted.get(existing)):
+            continue
+        if os.path.isdir(lk) and not os.path.islink(lk):
+            shutil.rmtree(lk)
+        else:
+            os.unlink(lk)
+    for name, target in sorted(wanted.items()):
+        link = os.path.join(stage, name)
         if not os.path.lexists(link):
-            os.symlink(os.path.abspath(path), link)
+            os.symlink(target, link)
     reader = spark.readStream.schema(schema).format("parquet")
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -163,37 +165,42 @@ def _skip_trailing_no_data_batch(spark: SparkSession):
 
 
 def _drain(sdf: DataFrame, checkpoint: str | None = None, mode: str = "append",
-           sink_path: str | None = None) -> None:
-    ckpt = checkpoint or tempfile.mkdtemp(prefix="ckpt_")
+           sink: Callable[[DataFrame, int], None] | str | None = None
+           ) -> None:
+    """Run ``sdf`` to completion under an ``availableNow`` trigger — the
+    one place this module starts a stream. ``sink`` is a
+    ``foreachBatch`` callable, a parquet output path, or None (noop).
+    ``checkpoint`` defaults to a fresh temp dir; the tx-landed runners
+    pass ``<base>/ckpt`` beside their tables, which is what lets
+    ``_certify_exactly_once`` (tests/test_streaming.py) wrap this
+    function, restart each drain against the same checkpoint and compare
+    every tx table beside it."""
     w = (
         sdf.writeStream.outputMode(mode)
-        .option("checkpointLocation", ckpt)
+        .option("checkpointLocation",
+                checkpoint or tempfile.mkdtemp(prefix="ckpt_"))
         .trigger(availableNow=True)
     )
-    if sink_path:
-        q = w.format("parquet").option("path", sink_path).start()
+    if callable(sink):
+        w = w.foreachBatch(sink)
+    elif sink:
+        w = w.format("parquet").option("path", sink)
     else:
-        q = w.format("noop").start()
-    q.awaitTermination()
+        w = w.format("noop")
+    w.start().awaitTermination()
 
 
 def _tx_landed_update_stream(sdf: DataFrame, base: str, app: str,
-                             spark: SparkSession,
-                             gate: bool = False) -> DataFrame:
+                             spark: SparkSession) -> DataFrame:
     """Drive an UPDATE-mode streaming DataFrame to completion, landing
     every micro-batch's emission (running totals per key, stamped with
     its batch id) into a transactional table via idempotent
     ``tx_append_txn`` keyed (app, batchId). Returns the landed table;
-    the caller resolves last-wins per key by batch_id.
-
-    ``gate=True`` additionally makes exactly-once a GATE, not a claim:
-    restart the stream against the same checkpoint (no new files → the
-    table version must not move, asserted) and force-replay batch 0's
-    commit under its txn id (must deduplicate, asserted). The gate arms
-    run in tests/test_streaming.py (VERDICT r11 order #1) — the
-    declared queries drain ONCE; their oracles still catch a lost or
-    doubled batch (the landed census hashes against the raw parquet),
-    the gate certifies the restart/replay machinery itself.
+    the caller resolves last-wins per key by batch_id. The declared
+    queries drain ONCE; their oracles still catch a lost or doubled
+    batch (the landed census hashes against the raw parquet), and the
+    restart/replay machinery itself is certified from outside by
+    ``_certify_exactly_once`` (tests/test_streaming.py).
 
     This is the ``run_streaming_tx_sink`` recipe generalized to
     update-mode aggregations: running totals make the last-wins read
@@ -204,7 +211,6 @@ def _tx_landed_update_stream(sdf: DataFrame, base: str, app: str,
         tx_append_txn,
         tx_init,
         tx_read,
-        tx_snapshot,
     )
 
     table, ckpt = os.path.join(base, "table"), os.path.join(base, "ckpt")
@@ -218,47 +224,23 @@ def _tx_landed_update_stream(sdf: DataFrame, base: str, app: str,
                       table, app=app, batch=batch_id, n_files=1,
                       shuffle=True)
 
-    def drain_once() -> None:
-        q = (
-            sdf.writeStream.outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
     with _state_partitions(spark):
-        drain_once()
-        if gate:
-            v = tx_snapshot(table)["version"]
-            drain_once()  # restart, same checkpoint: must commit nothing
-            if tx_snapshot(table)["version"] != v:
-                raise AssertionError(
-                    "checkpoint restart re-committed a batch")
-    if gate and tx_snapshot(table)["files"]:
-        # executor-crash replay: re-deliver under batch 0's txn id
-        v = tx_snapshot(table)["version"]
-        tx_append_txn(tx_read(spark, table), table, app=app, batch=0,
-                      n_files=1)
-        if tx_snapshot(table)["version"] != v:
-            raise AssertionError("replayed batch 0 was not deduplicated")
+        _drain(sdf, ckpt, mode="update", sink=sink)
     return tx_read(spark, table)
 
 
 def run_topic_frequencies(spark: SparkSession, sf_dir: str,
                           state_dir: str | None = None,
-                          watermark: str = "1 hour",
-                          gate: bool = False) -> DataFrame:
+                          watermark: str = "1 hour") -> DataFrame:
     """Streaming topic-frequency state (reference upsert+frequency++,
     ``memory.py:319-323``), scale-safe formulation with an
     EXACTLY-ONCE tx landing (full hash oracle since round 11):
 
     update-mode aggregation keyed **(topic, day)** → ``foreachBatch``
     lands each batch's running totals in a transactional table via
-    txn-keyed ``tx_append_txn`` (restart + forced-replay gated, see
-    ``_tx_landed_update_stream``) → last-wins per (topic, day) by
-    batch id → all-time totals as a rollup over day rows at read.
+    txn-keyed ``tx_append_txn`` (see ``_tx_landed_update_stream``) →
+    last-wins per (topic, day) by batch id → all-time totals as a
+    rollup over day rows at read.
 
     Why this shape at 100 TB/day: update mode emits only keys changed
     in the trigger; the watermark evicts state for closed day buckets,
@@ -282,8 +264,7 @@ def run_topic_frequencies(spark: SparkSession, sf_dir: str,
     # update mode + watermark-for-eviction-only: the trailing no-data
     # batch lands nothing (empty staged write + commit) — skip it
     with _skip_trailing_no_data_batch(spark):
-        landed = _tx_landed_update_stream(agg, base, "topic_freq", spark,
-                                          gate=gate)
+        landed = _tx_landed_update_stream(agg, base, "topic_freq", spark)
     w = Window.partitionBy("topic", "day_start_us").orderBy(
         F.desc("batch_id"))
     latest = (landed.withColumn("_rn", F.row_number().over(w))
@@ -298,22 +279,18 @@ def run_windowed_counts(spark: SparkSession, sf_dir: str,
                         window: str = "1 hour",
                         watermark: str = "10 minutes",
                         sink_dir: str | None = None,
-                        checkpoint: str | None = None,
-                        gate: bool = False) -> DataFrame:
+                        checkpoint: str | None = None) -> DataFrame:
     """Event-time tumbling-window rates with a watermark — the
     late-data-tolerant aggregation the reference lacks. Append mode:
     only watermark-finalized windows are emitted.
 
-    Exactly-once is GATED, not assumed: each batch's finalized windows
-    land in a transactional table via txn-keyed ``tx_append_txn``; with
-    ``gate=True`` (tests/test_streaming.py, VERDICT r11 order #1) the
-    run restarts the stream against the same checkpoint (no new files →
-    the table version must not move, asserted) and force-replays batch
-    0's commit (must deduplicate). The declared query drains once —
-    append mode emits each closed window exactly once, so the landed
-    table IS the result, and a lost or doubled batch breaks the driver
-    hash against the oracle's closed-form emission rule
-    (win_end <= max event time - watermark delay).
+    Each batch's finalized windows land in a transactional table via
+    txn-keyed ``tx_append_txn`` (restart + forced-replay certified by
+    ``_certify_exactly_once`` (tests/test_streaming.py)). The declared
+    query drains once — append mode emits each closed window exactly
+    once, so the landed table IS the result, and a lost or doubled batch
+    breaks the hash against the oracle's closed-form emission
+    rule (win_end <= max event time - watermark delay).
 
     ``sink_dir``/``checkpoint`` default to fresh temp dirs; pass stable
     paths to exercise restart semantics across CALLS too (pinned by
@@ -323,7 +300,6 @@ def run_windowed_counts(spark: SparkSession, sf_dir: str,
         tx_init,
         tx_latest_version,
         tx_read,
-        tx_snapshot,
     )
 
     base = sink_dir or tempfile.mkdtemp(prefix="win_")
@@ -348,30 +324,8 @@ def run_windowed_counts(spark: SparkSession, sf_dir: str,
         tx_append_txn(bdf, table, app="windowed_counts", batch=batch_id,
                       n_files=1, shuffle=True)
 
-    def drain_once() -> None:
-        q = (
-            agg.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
     with _state_partitions(ev.sparkSession):
-        drain_once()
-        if gate:
-            v = tx_snapshot(table)["version"]
-            drain_once()  # restart, same checkpoint: must commit nothing
-            if tx_snapshot(table)["version"] != v:
-                raise AssertionError(
-                    "checkpoint restart re-committed a batch")
-    if gate and tx_snapshot(table)["files"]:
-        v = tx_snapshot(table)["version"]
-        tx_append_txn(tx_read(spark, table), table, app="windowed_counts",
-                      batch=0, n_files=1)
-        if tx_snapshot(table)["version"] != v:
-            raise AssertionError("replayed batch 0 was not deduplicated")
+        _drain(agg, ckpt, mode="append", sink=sink)
     return tx_read(spark, table)
 
 
@@ -405,14 +359,7 @@ def run_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # first-seen rows emit in their data batch; the watermark only
     # evicts dedup state — the trailing no-data batch emits nothing
     with _state_partitions(spark), _skip_trailing_no_data_batch(spark):
-        q = (
-            agg.writeStream.outputMode("update")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        _drain(agg, mode="update", sink=sink)
     return spark.read.parquet(sink_dir + "/counts")
 
 
@@ -457,7 +404,7 @@ def run_stream_stream_join(spark: SparkSession, sf_dir: str,
     # watermark only bounds state — the trailing no-data batch emits
     # nothing (the left-outer twin NEEDS it and must not skip)
     with _state_partitions(spark), _skip_trailing_no_data_batch(spark):
-        _drain(joined, mode="append", sink_path=sink_dir)
+        _drain(joined, mode="append", sink=sink_dir)
     return spark.read.parquet(sink_dir)
 
 
@@ -469,8 +416,8 @@ _TAIL_OUT = StructType([
 ])
 
 
-def run_keep_last_state(spark: SparkSession, sf_dir: str, n: int = 5,
-                        gate: bool = False) -> DataFrame:
+def run_keep_last_state(spark: SparkSession, sf_dir: str, n: int = 5
+                        ) -> DataFrame:
     """Custom stateful operator via ``applyInPandasWithState``: per-user
     ring buffer of the last N event ids (the reference's ``records[-n:]``
     tail as *streaming state* instead of a batch window). State value is
@@ -478,7 +425,7 @@ def run_keep_last_state(spark: SparkSession, sf_dir: str, n: int = 5,
 
     Round-11 oracle upgrade: each micro-batch's per-user running state
     lands in a transactional table via txn-keyed ``tx_append_txn``
-    (restart + forced-replay gated, ``_tx_landed_update_stream``);
+    (``_tx_landed_update_stream``);
     last-wins per user by batch id is the final state — so the custom
     stateful operator now carries a full hash oracle (tail-of-N and
     count are closed-form SQL over the original parquet)."""
@@ -509,8 +456,7 @@ def run_keep_last_state(spark: SparkSession, sf_dir: str, n: int = 5,
     out = ev.groupBy("user_id").applyInPandasWithState(
         update, _TAIL_OUT, _TAIL_STATE, "Update", GroupStateTimeout.NoTimeout
     )
-    landed = _tx_landed_update_stream(out, base, "keep_last", spark,
-                                      gate=gate)
+    landed = _tx_landed_update_stream(out, base, "keep_last", spark)
     w = Window.partitionBy("user_id").orderBy(F.desc("batch_id"))
     return (landed.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
@@ -545,7 +491,7 @@ def run_session_windows(spark: SparkSession, sf_dir: str,
         )
     )
     with _state_partitions(spark):
-        _drain(agg, mode="append", sink_path=sink_dir)
+        _drain(agg, mode="append", sink=sink_dir)
     return spark.read.parquet(sink_dir)
 
 
@@ -677,14 +623,7 @@ def run_streaming_debounce(spark: SparkSession, sf_dir: str,
                      cache_updates=True)
 
     with _state_partitions(spark):
-        q = (
-            out.writeStream.outputMode("update")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        _drain(out, mode="update", sink=sink)
     per_key = spark.read.parquet(sink_dir + "/keys")
     return per_key.groupBy("event_type").agg(
         F.sum(F.col("n_kept") + F.col("n_debounced")).cast("bigint").alias("n_total"),
@@ -828,14 +767,7 @@ def run_streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.rename(staged, state_path)
 
     with _state_partitions(spark):
-        q = (
-            log.writeStream.outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        _drain(log, mode="append", sink=sink)
     if not os.path.isdir(state_path):
         # empty input: zero batches reached the sink, no state written
         return spark.createDataFrame([], StructType([
@@ -902,7 +834,7 @@ def run_stream_stream_left_join(spark: SparkSession, sf_dir: str,
         F.unix_micros(F.col("click_time")).alias("click_ts_us"),
     )
     with _state_partitions(spark):
-        _drain(joined, mode="append", sink_path=sink_dir)
+        _drain(joined, mode="append", sink=sink_dir)
     rows = spark.read.parquet(sink_dir)
     per_click = rows.groupBy("user_id", "click_id").agg(
         F.max(F.col("purchase_id").isNotNull().cast("int")).alias("attributed")
@@ -915,21 +847,19 @@ def run_stream_stream_left_join(spark: SparkSession, sf_dir: str,
     )
 
 
-def run_streaming_tx_sink(spark: SparkSession, sf_dir: str,
-                          gate: bool = False) -> DataFrame:
+def run_streaming_tx_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACTLY-ONCE streaming landing into the transactional table log
     (sources/txlog.py): each micro-batch commits as one idempotent
     ``tx_append_txn`` keyed by (app, batchId) — Structured Streaming
     replays a failed batch with the SAME batchId, and the txn id rides
     INSIDE the manifest so the replay check and the commit share one
-    atomic CAS. With ``gate=True`` (tests/test_streaming.py; VERDICT
-    r11 order #1 applied round 12) the run additionally (a) restarts
-    the stream against the same checkpoint (no new files -> the table
-    version must not move, asserted) and (b) force-replays batch 0's
-    commit — the no-op path a crashed-after-commit executor exercises.
-    The declared query drains ONCE; its census still hashes against
-    the oracle over the ORIGINAL parquet, so a duplicated or lost
-    batch breaks the gate either way.
+    atomic CAS. ``_certify_exactly_once`` (tests/test_streaming.py)
+    restarts the stream against the same checkpoint (no new files -> the
+    table version must not move) and force-replays batch 0's commit —
+    the no-op path a crashed-after-commit executor exercises. The
+    declared query drains ONCE; its census still hashes against the
+    oracle over the ORIGINAL parquet, so a duplicated or lost batch
+    breaks it either way.
 
     Scale shape: the sink is a plain parquet write per batch plus one
     8-byte-scale manifest link; commit cost is independent of table
@@ -967,34 +897,7 @@ def run_streaming_tx_sink(spark: SparkSession, sf_dir: str,
         # to 4 writers costs less than a full-batch exchange would
         tx_append_txn(bdf, table, app=app, batch=batch_id, n_files=4)
 
-    def drain_once() -> None:
-        q = (
-            proj.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    drain_once()
-    if gate:
-        v_after_drain = tx_snapshot(table)["version"]
-        drain_once()  # restart, same checkpoint: no new files, no commits
-        v_after_restart = tx_snapshot(table)["version"]
-        if v_after_restart != v_after_drain:
-            raise AssertionError("restart drain committed new versions")
-        # executor-crash replay: re-deliver a commit under batch 0's txn
-        # id (the payload is irrelevant — the id already in the manifest
-        # chain MUST make the whole call a no-op)
-        if tx_snapshot(table)["files"]:
-            replay_payload = tx_read(spark, table)
-            tx_append_txn(replay_payload, table, app=app, batch=0,
-                          n_files=1)
-            if tx_snapshot(table)["version"] != v_after_restart:
-                raise AssertionError(
-                    "replayed batch 0 was not deduplicated")
-
+    _drain(proj, ckpt, mode="append", sink=sink)
     if not tx_snapshot(table)["files"]:
         return spark.createDataFrame([], StructType([
             StructField("event_type", StringType()),
@@ -1070,14 +973,7 @@ def run_streaming_retractable_agg(spark: SparkSession,
             os.rename(staged, state_path)
 
     with _state_partitions(spark):
-        q = (
-            log.writeStream.outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        _drain(log, mode="append", sink=sink)
     if not os.path.isdir(state_path):
         from pyspark.sql.types import (LongType, StructField, StructType)
 
@@ -1159,14 +1055,7 @@ def run_streaming_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.rename(staged, state_path)
 
     with _state_partitions(spark):
-        q = (
-            log.writeStream.outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        _drain(log, mode="append", sink=sink)
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
     empty = StructType([
@@ -1262,14 +1151,7 @@ def run_streaming_cms_heavy_hitters(spark: SparkSession,
               ["user_id"], "exact_n")
 
     with _state_partitions(spark):
-        q = (
-            ev.writeStream.outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        _drain(ev, mode="append", sink=sink)
     from pyspark.sql.types import LongType, StructField, StructType
 
     if not os.path.isdir(exact_path):
@@ -1340,14 +1222,7 @@ def run_streaming_lc_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         _swap(seen, seen_path)
 
     with _state_partitions(spark):
-        q = (
-            ev.writeStream.outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        _drain(ev, mode="append", sink=sink)
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     if not os.path.isdir(bm_path):
@@ -1364,25 +1239,25 @@ def run_streaming_lc_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", "n_exact_distinct", "n_set_bits", "m_bits")
 
 
-def run_streaming_tx_change_feed(spark: SparkSession, sf_dir: str,
-                                 gate: bool = False) -> DataFrame:
+def run_streaming_tx_change_feed(spark: SparkSession, sf_dir: str
+                                 ) -> DataFrame:
     """Streaming twin of ``tx_change_feed_census``: the SAME commit
     history (two appends, a layout-only compaction, a DV delete, a COW
     delete) is consumed by TAILING the manifest chain through the
-    ``tx_change_feed`` Python streaming source (sources/cdf_stream.py)
-    — offsets are manifest versions, so every micro-batch is a whole
+    ``tx_change_feed`` Python streaming source (sources/cdf_stream.py) —
+    offsets are manifest versions, so every micro-batch is a whole
     (start, end] commit window and a replay re-reads byte-identical
     change rows. Each batch nets its weighted rows per commit and folds
     the per-(side, type) partial census into a STATE tx table via
     ``tx_append_txn`` keyed by the batch id — the landing is
     exactly-once under restart by the same manifest-CAS argument the
-    round-7 sink certified; ``gate=True`` (tests/test_streaming.py;
-    VERDICT r11 order #1 applied round 12) proves it by draining a
-    second time against the same checkpoint and asserting the table
-    version did not move. The declared query drains ONCE. The final
-    read aggregates the landed partials; equality with the
-    oracle-backed batch twin is pinned in tests/test_streaming.py,
-    closing the chain stream-feed == batch-feed == DuckDB."""
+    round-7 sink certified; ``_certify_exactly_once``
+    (tests/test_streaming.py) proves it by draining a second time
+    against the same checkpoint and asserting the table version did not
+    move. The declared query drains ONCE. The final read aggregates the
+    landed partials; equality with the oracle-backed batch twin is
+    pinned in tests/test_streaming.py, closing the chain stream-feed ==
+    batch-feed == DuckDB."""
     import shutil
 
     from pulsar_project_spark.queries.io_ops import _build_cdf_table
@@ -1440,22 +1315,7 @@ def run_streaming_tx_change_feed(spark: SparkSession, sf_dir: str,
         tx_append_txn(partial, state, app="cdf_fold", batch=batch_id,
                       n_files=1)
 
-    def drain_once() -> None:
-        q = (
-            feed.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    drain_once()
-    if gate:
-        v_after_drain = tx_snapshot(state)["version"]
-        drain_once()  # restart, same checkpoint: zero new commits
-        if tx_snapshot(state)["version"] != v_after_drain:
-            raise AssertionError("restart drain committed new versions")
+    _drain(feed, ckpt, mode="append", sink=sink)
     if not tx_snapshot(state)["files"]:
         from pyspark.sql.types import (
             LongType, StringType, StructField, StructType,
@@ -1538,23 +1398,20 @@ def _build_mv_table(spark: SparkSession, sf_dir: str) -> str:
     return path
 
 
-def run_streaming_tx_mv(spark: SparkSession, sf_dir: str,
-                        gate: bool = False) -> DataFrame:
+def run_streaming_tx_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING MATERIALIZED VIEW off the change data feed — the IVM
     capstone (VERDICT r8 order #6): the ``tx_change_feed`` source tails
     a commit history spanning every commit class (append / compaction /
-    DV delete / COW delete / RENAME / COW update), each micro-batch
-    nets its weighted rows per commit and folds a SIGNED per-type
-    partial (insert +, delete −) into a maintained aggregate tx table
-    via exactly-once ``tx_append_txn`` — with ``gate=True``
-    (tests/test_streaming.py; VERDICT r11 order #1 applied round 12)
-    drained twice against one checkpoint, asserting the restart
-    commits nothing; the declared query drains ONCE. The final view
-    (sum of partials, zero-count groups dropped) must hash-match the
-    oracle's direct census of the LIVE rows replayed from raw events:
-    the DBSP identity ``view(table) == fold(changes(table))`` certified
-    through a REAL stream, across a rename boundary, with storage
-    commits on both ends.
+    DV delete / COW delete / RENAME / COW update), each micro-batch nets
+    its weighted rows per commit and folds a SIGNED per-type partial
+    (insert +, delete −) into a maintained aggregate tx table via
+    exactly-once ``tx_append_txn`` (restart + forced-replay certified by
+    ``_certify_exactly_once`` (tests/test_streaming.py)); the declared
+    query drains ONCE. The final view (sum of partials, zero-count
+    groups dropped) must hash-match the oracle's direct census of the
+    LIVE rows replayed from raw events: the DBSP identity ``view(table)
+    == fold(changes(table))`` certified through a REAL stream, across a
+    rename boundary, with storage commits on both ends.
 
     Scale shape: view maintenance costs the feed (touched files per
     commit window) plus one mergeable aggregate per batch; the serving
@@ -1611,22 +1468,7 @@ def run_streaming_tx_mv(spark: SparkSession, sf_dir: str,
         tx_append_txn(partial, state, app="cdf_mv", batch=batch_id,
                       n_files=1)
 
-    def drain_once() -> None:
-        q = (
-            feed.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    drain_once()
-    if gate:
-        v_after_drain = tx_snapshot(state)["version"]
-        drain_once()  # restart, same checkpoint: zero new commits
-        if tx_snapshot(state)["version"] != v_after_drain:
-            raise AssertionError("restart drain committed new versions")
+    _drain(feed, ckpt, mode="append", sink=sink)
     if not tx_snapshot(state)["files"]:
         from pyspark.sql.types import (
             LongType, StringType, StructField, StructType,
@@ -1644,24 +1486,24 @@ def run_streaming_tx_mv(spark: SparkSession, sf_dir: str,
     )
 
 
-def run_streaming_tx_tracked_sink(spark: SparkSession, sf_dir: str,
-                                  gate: bool = False) -> DataFrame:
+def run_streaming_tx_tracked_sink(spark: SparkSession, sf_dir: str
+                                  ) -> DataFrame:
     """EXACTLY-ONCE streaming landing into a ROW-TRACKED tx table
-    (``tx_append_tracked_txn``): each micro-batch's rows get durable
-    ids from their very first commit, the replay of a committed batch
-    is a no-op that neither double-appends nor burns id range, and the
-    census carries an ID-ALGEBRA row that makes exactly-once checkable
-    by hash WITHOUT depending on how the stream split batches: if and
-    only if every row landed exactly once, the id multiset is exactly
-    {0..n-1}, so count = n, sum(_rid) = n(n-1)/2 and max(_rid) = n-1.
-    A doubled batch inflates the sum; a lost one truncates it; an
-    id-burning replay shifts the max — any of the three breaks the
-    oracle hash. The restart + forced-replay arms run under
-    ``gate=True`` (tests/test_streaming.py; VERDICT r11 order #1
-    applied round 12); the declared query drains ONCE — the id algebra
-    above keeps exactly-once hash-checkable without them. (At extreme scale the n^2/2 sum would outgrow int64
-    around 4e9 rows — production would fold ids modulo a prime; the
-    census documents the exact form the oracle replays.)"""
+    (``tx_append_tracked_txn``): each micro-batch's rows get durable ids
+    from their very first commit, the replay of a committed batch is a
+    no-op that neither double-appends nor burns id range, and the census
+    carries an ID-ALGEBRA row that makes exactly-once checkable by hash
+    WITHOUT depending on how the stream split batches: if and only if
+    every row landed exactly once, the id multiset is exactly {0..n-1},
+    so count = n, sum(_rid) = n(n-1)/2 and max(_rid) = n-1. A doubled
+    batch inflates the sum; a lost one truncates it; an id-burning
+    replay shifts the max — any of the three breaks the oracle hash. The
+    restart + forced-replay arms run in ``_certify_exactly_once``
+    (tests/test_streaming.py); the declared query drains ONCE — the id
+    algebra above keeps exactly-once hash-checkable without them. (At
+    extreme scale the n^2/2 sum would outgrow int64 around 4e9 rows —
+    production would fold ids modulo a prime; the census documents the
+    exact form the oracle replays.)"""
     import shutil
 
     from pulsar_project_spark.sources.txlog import (
@@ -1692,39 +1534,7 @@ def run_streaming_tx_tracked_sink(spark: SparkSession, sf_dir: str,
         tx_append_tracked_txn(bdf, table, app=app, batch=batch_id,
                               n_files=4)
 
-    def drain_once() -> None:
-        q = (
-            proj.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    drain_once()
-    if gate:
-        snap0 = tx_snapshot(table)
-        drain_once()  # restart, same checkpoint: no new files, no commits
-        snap = tx_snapshot(table)
-        v_after, hwm_after = snap["version"], snap.get("row_hwm", 0)
-        if v_after != snap0["version"]:
-            raise AssertionError("restart drain committed new versions")
-        if hwm_after != snap0.get("row_hwm", 0):
-            raise AssertionError("restart drain burned id range")
-        if snap["files"]:
-            # executor-crash replay under batch 0's txn id: must be a
-            # no-op for BOTH the file list and the id high-water-mark
-            replay_payload = tx_read_tracked(spark, table).drop("_rid")
-            tx_append_tracked_txn(replay_payload, table, app=app, batch=0,
-                                  n_files=1)
-            snap2 = tx_snapshot(table)
-            if snap2["version"] != v_after:
-                raise AssertionError(
-                    "replayed batch 0 was not deduplicated")
-            if snap2.get("row_hwm", 0) != hwm_after:
-                raise AssertionError("replayed batch 0 burned id range")
-
+    _drain(proj, ckpt, mode="append", sink=sink)
     empty = StructType([
         StructField("event_type", StringType()),
         StructField("n_events", LongType()),
@@ -1756,21 +1566,19 @@ def run_streaming_tx_tracked_sink(spark: SparkSession, sf_dir: str,
 
 def run_streaming_ann_ingest(spark: SparkSession, sf_dir: str,
                              n_source_files: int = 4,
-                             gate: bool = False,
                              max_files_per_trigger: int = 2) -> DataFrame:
     """STREAMING ANN INGESTION — the embedding store's write path as a
     genuine multi-batch stream: the vector corpus arrives file-by-file
-    (``maxFilesPerTrigger=1`` over a {n}-file staging of the
-    embeddings parquet), each micro-batch is assigned against an
-    OFFLINE-FROZEN coarse quantizer (``kmeans_assign_to``, no
-    retraining) and PQ-encoded, and the (vec_id, label, subspace,
-    code) rows land in the index tx table via txn-keyed
-    ``tx_append_txn`` — exactly-once gated the standard way under
-    ``gate=True`` (tests/test_streaming.py, VERDICT r11 order #1:
-    restart against the checkpoint must commit nothing, asserted;
-    batch 0's commit force-replayed must deduplicate, asserted). The
-    declared query drains once; the census oracle still breaks on any
-    lost or doubled batch.
+    (``maxFilesPerTrigger=1`` over a {n}-file staging of the embeddings
+    parquet), each micro-batch is assigned against an OFFLINE-FROZEN
+    coarse quantizer (``kmeans_assign_to``, no retraining) and
+    PQ-encoded, and the (vec_id, label, subspace, code) rows land in the
+    index tx table via txn-keyed ``tx_append_txn`` — exactly-once
+    certified the standard way by ``_certify_exactly_once``
+    (tests/test_streaming.py) (restart against the checkpoint must
+    commit nothing; batch 0's commit force-replayed must deduplicate).
+    The declared query drains once; the census oracle still breaks on
+    any lost or doubled batch.
 
     Soundness of the full oracle: per-vector assign+encode is a pure
     function of (vector, frozen quantizer), and the landed set is the
@@ -1794,7 +1602,6 @@ def run_streaming_ann_ingest(spark: SparkSession, sf_dir: str,
         tx_append_txn,
         tx_init,
         tx_read,
-        tx_snapshot,
     )
 
     emb = load_table(spark, sf_dir, "embeddings").filter(
@@ -1857,31 +1664,8 @@ def run_streaming_ann_ingest(spark: SparkSession, sf_dir: str,
         tx_append_txn(part, idx_tbl, app=app, batch=batch_id,
                       n_files=1, shuffle=True)
 
-    def drain_once() -> None:
-        q = (
-            vec_stream.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
     with _state_partitions(spark):
-        drain_once()
-        if gate:
-            v = tx_snapshot(idx_tbl)["version"]
-            drain_once()  # restart, same checkpoint: must commit nothing
-            if tx_snapshot(idx_tbl)["version"] != v:
-                raise AssertionError(
-                    "checkpoint restart re-committed a batch")
-    if gate and tx_snapshot(idx_tbl)["files"]:
-        v = tx_snapshot(idx_tbl)["version"]
-        tx_append_txn(tx_read(spark, idx_tbl), idx_tbl, app=app,
-                      batch=0, n_files=1)
-        if tx_snapshot(idx_tbl)["version"] != v:
-            raise AssertionError("replayed batch 0 was not deduplicated")
-
+        _drain(vec_stream, ckpt, mode="append", sink=sink)
     return (tx_read(spark, idx_tbl)
             .groupBy("label", "subspace")
             .agg(F.count(F.lit(1)).alias("n_vecs"),

@@ -1,172 +1,45 @@
-"""Registry-order regression gate (round-stamped).
+"""Registry-order regression gate.
 
 The driver's per-round correctness check covers roughly the FIRST 50
 registry entries. ``registry.CORE_FIRST`` pins exactly which 50 those
-are, composed from round-stamped blocks: canary → never-driver-checked
-→ new-this-round → re-certs → stalest-green refresh.
-
-Round-5 lesson (VERDICT r5, "What's wrong" #1): the round-5 version of
-this test computed "driver-green" from the UNSTAMPED ``CORRECTNESS_r*``
-glob, so the assertion "no slot wasted on an already-green query"
-became self-defeating the moment the driver wrote the round-5 artifact
-(which made those very queries green). Every assertion here therefore
-reads only artifacts from rounds BEFORE the round whose rotation it
-asserts — the suite stays green before AND after the driver's artifact
-drop, including in future rounds.
+are; these tests check its structure: 50 unique names, the canary
+first, every name registered and oracle-backed, and the window leading
+both ``queries()`` and ``oracle_sql()`` whatever the import order.
 """
 
 from __future__ import annotations
 
-import glob
-import json
 import os
-import re
 
 import __spark_entry__ as e
-from pulsar_project_spark.registry import (
-    CORE_FIRST,
-    NEVER_CHECKED_R12,
-    NEW_R12,
-    RECERTS_R12,
-    ROWS_ONLY_R12,
-    STALE_REFRESH_R12,
-)
+from pulsar_project_spark.registry import CORE_FIRST
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# The round whose rotation this file asserts. Bump together with the
-# registry's block constants each round.
-_ROUND = 12
-
-
-def _driver_green(before_round: int = _ROUND) -> set[str]:
-    """Cumulative driver-green set from rounds strictly before ``before_round``.
-
-    Round-stamping is the point: the driver drops ``CORRECTNESS_r{N}.json``
-    AFTER the builder closes round N, and the rotation for round N was
-    decided from rounds < N — so the assertions must look at the same
-    evidence the rotation was built from, not whatever has landed since.
-    """
-    green: set[str] = set()
-    for path in sorted(glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if m is None or int(m.group(1)) >= before_round:
-            continue
-        with open(path) as fh:
-            for name, v in json.load(fh).items():
-                if (v.get("rows_match") and v.get("schema_match", True)
-                        and v.get("hash_match", True)):
-                    green.add(name)
-    return green
-
 
 def test_core_fifty_lead_the_registry():
-    names = list(e.queries())
-    assert len(CORE_FIRST) == 50
-    assert names[: len(CORE_FIRST)] == list(CORE_FIRST)
+    assert len(CORE_FIRST) == len(set(CORE_FIRST)) == 50
+    assert list(e.queries())[:50] == list(CORE_FIRST)
+    assert list(e.oracle_sql())[:50] == list(CORE_FIRST)
 
 
 def test_core_fifty_all_have_oracles():
-    # every driver-budget entry gets the STRONG check (hash vs DuckDB)
-    # — except the declared ROWS_ONLY_R12 block, whose POINT is to get
-    # never-checked rows-only queries a driver rows>0 record (VERDICT
-    # r10 order #2); those must NOT have oracles (else they'd belong
-    # in NEW/NEVER_CHECKED instead).
+    # every window entry gets the STRONG check (hash vs DuckDB)
     oracles = e.oracle_sql()
-    missing = [n for n in CORE_FIRST
-               if n not in oracles and n not in ROWS_ONLY_R12]
+    missing = [n for n in CORE_FIRST if n not in oracles]
     assert not missing, f"core entries without oracles: {missing}"
-    mislabeled = [n for n in ROWS_ONLY_R12 if n in oracles]
-    assert not mislabeled, f"rows-only slots with oracles: {mislabeled}"
 
 
 def test_canary_leads():
-    # slot 1 is the flagship, green r1-r9 — if the driver ever reports
-    # it red, the harness (not the engine) changed
+    # slot 1 is the flagship, green every round — if it is ever
+    # reported red, the harness (not the engine) changed
     assert CORE_FIRST[0] == "simple_rag_topk"
 
 
-def test_never_checked_block_is_exactly_the_gap():
-    # the POINT of the rotation: every oracle-backed declared query
-    # that lacked a verdict going INTO this round gets a front slot.
-    # Computed strictly from rounds < _ROUND so the driver's round-6
-    # artifact cannot invalidate it.
-    green = _driver_green()
-    oracles = set(e.oracle_sql())
-    gap = {
-        n for n in e.queries()
-        if n in oracles and n not in green and n not in NEW_R12
-    }
-    block = set(NEVER_CHECKED_R12)
-    assert block <= set(CORE_FIRST), "never-checked block lost its slots"
-    missing = sorted(gap - block - set(CORE_FIRST))
-    assert not missing, f"oracle-backed queries with no verdict and no slot: {missing}"
-    wasted = sorted(block & green)
-    assert not wasted, f"slot spent on already-green queries: {wasted}"
-
-
-def test_new_round_additions_get_slots():
-    for n in (*NEW_R12, *ROWS_ONLY_R12):
-        assert n in CORE_FIRST, f"round-{_ROUND} addition without a slot: {n}"
-
-
-def test_remaining_slots_are_deliberate_recerts():
-    # every slot that isn't canary/never-checked/new must be a KNOWN
-    # driver-green query (a re-cert), never an accidental stranger
-    green = _driver_green()
-    strangers = [
-        n for n in CORE_FIRST[1:]
-        if n not in NEVER_CHECKED_R12 and n not in NEW_R12
-        and n not in ROWS_ONLY_R12 and n not in green
-    ]
-    assert not strangers, f"unexplained core entries: {strangers}"
-    # and the declared re-cert / stale blocks really are re-certs
-    for n in (*RECERTS_R12, *STALE_REFRESH_R12):
-        assert n in green, f"declared re-cert was never driver-green: {n}"
-
-
 def test_all_declared_queries_still_registered():
-    # rotation must not LOSE anything: every driver-green name and
-    # every CORE_FIRST name still resolves to a runnable query
     names = set(e.queries())
-    for n in CORE_FIRST:
-        assert n in names, f"core entry vanished from registry: {n}"
-    lost = _driver_green() - names
-    assert not lost, f"previously-green queries vanished: {lost}"
-
-
-def test_round_stamp_filter_actually_filters():
-    """Direct pin of the stamp logic (the round-5 bug was an unstamped
-    glob; the first round-6 version of THIS test compared
-    `_driver_green()` to itself and could never fail — round-6
-    self-review). Three genuinely falsifiable properties:
-
-    * before_round=1 sees NO artifact (round numbering starts at 1);
-    * before_round=2 sees exactly the round-1 file's green set,
-      cross-checked against an independent read of that file;
-    * the reader is monotone in before_round, and any name that first
-      went green in round k is invisible at before_round=k.
-    """
-    assert _driver_green(1) == set()
-
-    r1_path = os.path.join(_REPO, "CORRECTNESS_r01.json")
-    with open(r1_path) as fh:
-        r1_green = {
-            name for name, v in json.load(fh).items()
-            if (v.get("rows_match") and v.get("schema_match", True)
-                and v.get("hash_match", True))
-        }
-    assert _driver_green(2) == r1_green
-
-    prev: set[str] = set()
-    for k in range(1, _ROUND + 1):
-        cur = _driver_green(k)
-        assert prev <= cur, f"reader not monotone at before_round={k}"
-        newly = cur - prev
-        if newly:
-            # names first green in round k-1 must be invisible at k-1
-            assert not (newly & _driver_green(k - 1))
-        prev = cur
+    vanished = [n for n in CORE_FIRST if n not in names]
+    assert not vanished, f"core entries vanished from registry: {vanished}"
 
 
 def test_entry_first_import_still_yields_core_order():
@@ -187,15 +60,9 @@ def test_entry_first_import_still_yields_core_order():
         # entry()'s import path, exactly: a query module first
         from pulsar_project_spark.queries.retrieval import q_simple_rag_topk
         import __spark_entry__ as e
-        names = list(e.queries())
-        onames = list(e.oracle_sql())
         from pulsar_project_spark.registry import CORE_FIRST
-        assert names[:50] == list(CORE_FIRST), names[:5]
-        # ORACLES holds only oracle-backed names: the rows-only window
-        # slots (ROWS_ONLY_R12) are absent by design, so compare the
-        # oracle ordering against CORE_FIRST restricted to its keys.
-        core_oracled = [n for n in CORE_FIRST if n in set(onames)]
-        assert onames[:len(core_oracled)] == core_oracled, onames[:5]
+        assert list(e.queries())[:50] == list(CORE_FIRST)
+        assert list(e.oracle_sql())[:50] == list(CORE_FIRST)
         print("ORDER_OK")
     """)
     out = subprocess.run([sys.executable, "-c", code],

@@ -508,126 +508,211 @@ def test_twin_tx_change_feed(spark):
 
 
 # ---------------------------------------------------------------------------
-# Exactly-once certification gates (VERDICT r11 order #1): the restart +
-# forced-replay arms moved OUT of the declared-query path into these tests.
-# Each gate drains, snapshots the tx version, restarts against the same
-# checkpoint (must commit nothing — asserted INSIDE the runner between the
-# drains, ADVICE r11 #1), then force-replays batch 0's commit under its txn
-# id (must deduplicate). The runners raise AssertionError on any violation,
-# so a plain call IS the assertion; each gate also re-checks the result
-# against its batch twin so the gated path returns the same answer.
+# Exactly-once certification, from outside the runners. The declared
+# queries drain ONCE; ``_certify_exactly_once`` wraps ``pipeline._drain``
+# (the one place a stream starts) so that each drain of a tx-landed
+# runner is restarted against the same checkpoint, and every tx table
+# beside the checkpoint must come out unchanged (version, and row_hwm
+# where the table tracks rows). After the runner returns, batch 0 is
+# re-delivered twice — straight to the table under the (app, batch)
+# txn id read from its manifests, and through the runner's own
+# foreachBatch sink with batch id 0 — and both must be no-ops.
 # ---------------------------------------------------------------------------
 
 
-@pytest.mark.gate  # exactly-once/restart certification arm
-def test_topic_frequencies_exactly_once_gate(spark):
-    from pulsar_project_spark.sources.tables import load_events
-    from pulsar_project_spark.streaming import run_topic_frequencies
+def _tx_state(tables):
+    from pulsar_project_spark.sources.txlog import tx_snapshot
 
-    got = run_topic_frequencies(spark, SF_SMOKE, gate=True)
-    want = (
-        load_events(spark, SF_SMOKE)
-        .filter(F.col("ts_us").isNotNull())
-        .groupBy(F.col("event_type").alias("topic"))
-        .agg(F.count("*").alias("frequency"),
-             F.max("ts_us").alias("last_updated_us"))
-    )
-    assert {tuple(r) for r in got.collect()} == {
-        tuple(r) for r in want.collect()}
+    snaps = {t: tx_snapshot(t) for t in tables}
+    return {t: (s["version"], s.get("row_hwm")) for t, s in snaps.items()}
 
 
-@pytest.mark.gate  # exactly-once/restart certification arm
-def test_windowed_counts_exactly_once_gate(spark):
-    from pulsar_project_spark.streaming import run_windowed_counts
+def _certify_exactly_once(spark, monkeypatch, run):
+    """Run ``run()`` with every ``pipeline._drain`` restarted as above,
+    then replay batch 0; raise AssertionError on any commit the restart
+    or a replay makes. Returns the run's result rows (collected before
+    the replays, and before a later call can reuse the runner's per-pid
+    table dirs)."""
+    import os
 
-    gated = run_windowed_counts(spark, SF_SMOKE, gate=True)
-    plain = run_windowed_counts(spark, SF_SMOKE, gate=False)
-    cols = ["win_start_us", "event_type", "n"]
-    assert {tuple(r) for r in gated.select(cols).collect()} == {
-        tuple(r) for r in plain.select(cols).collect()}
-
-
-@pytest.mark.gate  # exactly-once/restart certification arm
-def test_keep_last_exactly_once_gate(spark):
-    from pulsar_project_spark.streaming import run_keep_last_state
-
-    gated = run_keep_last_state(spark, SF_SMOKE, gate=True)
-    plain = run_keep_last_state(spark, SF_SMOKE, gate=False)
-    assert {tuple(r) for r in gated.collect()} == {
-        tuple(r) for r in plain.collect()}
-
-
-@pytest.mark.gate  # exactly-once/restart certification arm
-def test_tx_sink_exactly_once_gate(spark):
-    from pulsar_project_spark.streaming.pipeline import run_streaming_tx_sink
-
-    gated = {tuple(r) for r in
-             run_streaming_tx_sink(spark, SF_SMOKE, gate=True).collect()}
-    plain = {tuple(r) for r in
-             run_streaming_tx_sink(spark, SF_SMOKE, gate=False).collect()}
-    assert gated == plain
-
-
-@pytest.mark.gate  # exactly-once/restart certification arm
-def test_tx_change_feed_exactly_once_gate(spark):
-    from pulsar_project_spark.streaming.pipeline import (
-        run_streaming_tx_change_feed,
+    import pulsar_project_spark.streaming.pipeline as P
+    from pulsar_project_spark.sources.txlog import (
+        tx_append_tracked_txn,
+        tx_append_txn,
+        tx_latest_version,
+        tx_read,
+        tx_read_tracked,
+        tx_snapshot,
     )
 
-    gated = {tuple(r) for r in
-             run_streaming_tx_change_feed(spark, SF_SMOKE,
-                                          gate=True).collect()}
-    plain = {tuple(r) for r in
-             run_streaming_tx_change_feed(spark, SF_SMOKE,
-                                          gate=False).collect()}
-    assert gated == plain
+    real_drain = P._drain
+    drains = []  # (tx tables beside the checkpoint, sink, stream schema)
+
+    def drain_then_restart(sdf, checkpoint=None, mode="append", sink=None):
+        assert checkpoint, "a tx-landed drain must own a stable checkpoint"
+        real_drain(sdf, checkpoint, mode, sink)
+        base = os.path.dirname(checkpoint)
+        tables = sorted(
+            os.path.join(base, d) for d in os.listdir(base)
+            if tx_latest_version(os.path.join(base, d)) is not None)
+        assert tables, f"no tx table beside checkpoint {checkpoint}"
+        drains.append((tables, sink, sdf.schema))
+        before = _tx_state(tables)
+        real_drain(sdf, checkpoint, mode, sink)  # no new input
+        if _tx_state(tables) != before:
+            raise AssertionError(
+                f"checkpoint restart re-committed a batch: {before} -> "
+                f"{_tx_state(tables)}")
+
+    monkeypatch.setattr(P, "_drain", drain_then_restart)
+    rows = {tuple(r) for r in run().collect()}
+    monkeypatch.undo()
+    assert drains, "the runner never drained a stream"
+
+    for tables, sink, schema in drains:
+        before = _tx_state(tables)
+        replayed = 0
+        for t in tables:
+            snap = tx_snapshot(t)
+            apps = [m["txn"]["app"] for m in
+                    (tx_snapshot(t, v) for v in range(snap["version"] + 1))
+                    if m.get("txn", {}).get("batch") == 0]
+            if not apps:
+                continue  # not a streaming landing (e.g. frozen centroids)
+            assert snap["files"], f"{t}: nothing landed, replay proves nothing"
+            # the payload is irrelevant: the id already in the manifest
+            # chain must make the call a no-op
+            if "row_hwm" in snap:
+                tx_append_tracked_txn(tx_read_tracked(spark, t).drop("_rid"),
+                                      t, app=apps[0], batch=0, n_files=1)
+            else:
+                tx_append_txn(tx_read(spark, t), t, app=apps[0], batch=0,
+                              n_files=1)
+            replayed += 1
+        assert replayed, f"no table in {tables} carried a batch-0 txn id"
+        if _tx_state(tables) != before:
+            raise AssertionError("replayed batch 0 was not deduplicated")
+        # Spark re-invokes foreachBatch with the same batch id after an
+        # executor crash; a sink that keys its commit by anything else
+        # lands the batch twice
+        sink(spark.createDataFrame([], schema), 0)
+        if _tx_state(tables) != before:
+            raise AssertionError(
+                "batch 0 re-delivered through the sink landed again")
+    return rows
+
+
+_TX_LANDED_RUNNERS = [
+    ("run_topic_frequencies", {}),
+    ("run_windowed_counts", {}),
+    ("run_keep_last_state", {}),
+    ("run_streaming_tx_sink", {}),
+    ("run_streaming_tx_change_feed", {}),
+    ("run_streaming_tx_mv", {}),
+    ("run_streaming_tx_tracked_sink", {}),
+    # 1 file per trigger: 4 micro-batches, the strongest exercise; the
+    # plain run keeps the declared 2 per trigger, so the equality also
+    # certifies the batch-split independence the trigger sizing rests on
+    ("run_streaming_ann_ingest", {"max_files_per_trigger": 1}),
+]
 
 
 @pytest.mark.gate  # exactly-once/restart certification arm
-def test_tx_mv_exactly_once_gate(spark):
-    from pulsar_project_spark.streaming.pipeline import run_streaming_tx_mv
+@pytest.mark.parametrize("runner, kwargs", _TX_LANDED_RUNNERS,
+                         ids=[r for r, _ in _TX_LANDED_RUNNERS])
+def test_tx_landed_runner_exactly_once(spark, monkeypatch, runner, kwargs):
+    import pulsar_project_spark.streaming.pipeline as P
 
-    gated = {tuple(r) for r in
-             run_streaming_tx_mv(spark, SF_SMOKE, gate=True).collect()}
-    plain = {tuple(r) for r in
-             run_streaming_tx_mv(spark, SF_SMOKE, gate=False).collect()}
-    assert gated == plain
+    run = getattr(P, runner)
+    checked = _certify_exactly_once(
+        spark, monkeypatch, lambda: run(spark, SF_SMOKE, **kwargs))
+    plain = {tuple(r) for r in run(spark, SF_SMOKE).collect()}
+    assert checked == plain
 
 
 @pytest.mark.gate  # exactly-once/restart certification arm
-def test_tx_tracked_sink_exactly_once_gate(spark):
-    from pulsar_project_spark.streaming.pipeline import (
-        run_streaming_tx_tracked_sink,
+def test_exactly_once_check_catches_unkeyed_sink(spark, monkeypatch,
+                                                 tmp_path):
+    """The moved check must still catch the bug it exists for: a sink
+    that commits under a fresh txn id on every delivery (instead of
+    the batch id) double-lands a batch Spark re-delivers."""
+    import itertools
+
+    import pulsar_project_spark.streaming.pipeline as P
+    from pulsar_project_spark.sources.txlog import (
+        tx_append_txn,
+        tx_init,
+        tx_read,
     )
 
-    gated = {tuple(r) for r in
-             run_streaming_tx_tracked_sink(spark, SF_SMOKE,
-                                           gate=True).collect()}
-    plain = {tuple(r) for r in
-             run_streaming_tx_tracked_sink(spark, SF_SMOKE,
-                                           gate=False).collect()}
-    assert gated == plain
+    def broken_runner():
+        table = str(tmp_path / "table")
+        tx_init(table)
+        deliveries = itertools.count()
+
+        def sink(bdf, batch_id):
+            tx_append_txn(bdf, table, app="broken",
+                          batch=next(deliveries), n_files=1)
+
+        P._drain(P.events_stream(spark, SF_SMOKE).select("event_id"),
+                 str(tmp_path / "ckpt"), "append", sink)
+        return tx_read(spark, table)
+
+    with pytest.raises(AssertionError, match="re-delivered through the sink"):
+        _certify_exactly_once(spark, monkeypatch, broken_runner)
 
 
-@pytest.mark.gate  # exactly-once/restart certification arm
-def test_ann_ingest_exactly_once_gate(spark):
-    from pulsar_project_spark.streaming.pipeline import (
-        run_streaming_ann_ingest,
-    )
+def test_runners_carry_no_certification_flags():
+    import inspect
 
-    # collect each result BEFORE the next call: the runner stages its
-    # tx tables under a per-pid dir it clears at entry, so a lazy
-    # DataFrame from call 1 dangles once call 2 starts. The gated run
-    # forces 1 file per trigger (4 micro-batches, the strongest
-    # exactly-once exercise); the plain run uses the declared default
-    # (2 files per trigger, round 12) — equality certifies the
-    # batch-split independence the trigger sizing rests on.
-    gated = {tuple(r) for r in
-             run_streaming_ann_ingest(spark, SF_SMOKE, gate=True,
-                                      max_files_per_trigger=1).collect()}
-    plain = {tuple(r) for r in
-             run_streaming_ann_ingest(spark, SF_SMOKE, gate=False).collect()}
-    assert gated == plain
+    import pulsar_project_spark.queries.similarity_ops as S
+    import pulsar_project_spark.streaming.pipeline as P
+
+    flagged = [
+        f"{mod.__name__}.{name}"
+        for mod in (P, S) for name, fn in vars(mod).items()
+        if name.startswith("run_") and callable(fn)
+        and {"gate", "verify_rebuild"} & set(inspect.signature(fn).parameters)
+    ]
+    assert not flagged, flagged
+
+
+def test_events_stream_follows_a_source_that_changes_shape(spark, tmp_path):
+    """A directory-shaped events source replaced by a single file at the
+    same path hashes to the same stage dir: the stream must read the
+    file's rows only, and the stage must keep no link from the old
+    shape. An entry that is not a link at all (a directory left in the
+    stage) is pruned too, not a crash."""
+    import hashlib
+    import os
+    import shutil
+    import tempfile
+
+    import pulsar_project_spark.streaming.pipeline as P
+
+    src = spark.read.parquet(f"{SF_SMOKE}/events.parquet").limit(50)
+    path = tmp_path / "events.parquet"
+    stage = os.path.join(tempfile.gettempdir(), "events_src_" + hashlib.md5(
+        str(path.resolve()).encode()).hexdigest()[:12])
+    os.makedirs(os.path.join(stage, "leftover"))
+
+    def streamed_rows():
+        out = str(tmp_path / "out")
+        shutil.rmtree(out, ignore_errors=True)
+        P._drain(P.events_stream(spark, str(tmp_path)).select("event_id"),
+                 sink=out)
+        return spark.read.parquet(out).count()
+
+    src.repartition(2).write.parquet(str(path))  # directory, 2 parts
+    assert streamed_rows() == 50
+    assert len(os.listdir(stage)) == 2
+    shutil.rmtree(path)
+    staged = str(tmp_path / "single")
+    src.limit(20).coalesce(1).write.parquet(staged)
+    part = next(p for p in os.listdir(staged) if p.endswith(".parquet"))
+    shutil.move(os.path.join(staged, part), str(path))  # now one file
+    assert streamed_rows() == spark.read.parquet(str(path)).count() == 20
+    assert os.listdir(stage) == ["events.parquet"]
 
 
 def test_streaming_dedup_collapses_null_event_time_rows(spark):
