@@ -47,11 +47,30 @@ def table_path(sf_dir: str, name: str) -> str:
 # parquet exactly as a fresh read would (this is the same class of
 # driver-side metadata reuse as Spark's own per-session
 # FileStatusCache, extended to the DataFrame wrapper). The mtime/size
-# key invalidates on corpus regeneration; the WeakKeyDictionary ties
-# entry lifetime to the owning session so a stopped session can never
-# serve a stale plan to its successor.
-_PLAN_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary())
+# key invalidates on corpus regeneration. Each session's plans live in
+# a ``_Plans`` dict held strongly only by the session itself: a cached
+# DataFrame references its session, so any module-level strong
+# reference to the plans would keep a dropped session alive forever.
+# Session -> plans -> DataFrame -> session is then a plain cycle the
+# collector frees, and ``_PLAN_CACHE`` (session id -> plans) holds the
+# plans weakly, so the entry goes with them; a stopped session can
+# never serve a stale plan to its successor.
+class _Plans(dict):
+    """One session's plan memo (a dict subclass, so it can be weakly
+    referenced)."""
+
+
+_PLAN_CACHE: "weakref.WeakValueDictionary[int, _Plans]" = (
+    weakref.WeakValueDictionary())
+
+
+def _session_plans(spark) -> dict:
+    plans = _PLAN_CACHE.get(id(spark))
+    if plans is None:
+        plans = _Plans()
+        spark._pulsar_plans = plans  # the one strong reference
+        _PLAN_CACHE[id(spark)] = plans
+    return plans
 
 
 def _cached_plan(spark: SparkSession, path: str, tag: str, build):
@@ -60,7 +79,7 @@ def _cached_plan(spark: SparkSession, path: str, tag: str, build):
     except OSError:
         return build()  # absent/racing path: never cache
     key = (tag, os.path.realpath(path), st.st_mtime_ns, st.st_size)
-    per_session = _PLAN_CACHE.setdefault(spark, {})
+    per_session = _session_plans(spark)
     df = per_session.get(key)
     if df is None:
         df = build()
@@ -163,10 +182,15 @@ def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     dfs: dict[str, DataFrame] = {}
     state = []
     for name in TABLE_NAMES:
-        if os.path.exists(table_path(sf_dir, name)):
-            dfs[name] = load_table(spark, sf_dir, name)
-            st = os.stat(table_path(sf_dir, name))
-            state.append((name, st.st_mtime_ns, st.st_size))
+        path = table_path(sf_dir, name)
+        if not os.path.exists(path):
+            continue
+        try:
+            st = os.stat(path)
+        except OSError:
+            continue  # vanished since the exists check: skip it too
+        dfs[name] = load_table(spark, sf_dir, name)
+        state.append((name, st.st_mtime_ns, st.st_size))
     # re-registering the identical view set is ~10 py4j round trips
     # (~250 ms) per call; skip when THIS function's last registration on
     # this session covered the same (sf_dir, corpus-state). Any change —
@@ -174,7 +198,7 @@ def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     # in the key and re-registers. Nothing else in this package creates
     # temp views under these names.
     key = (os.path.realpath(sf_dir), tuple(state))
-    per_session = _PLAN_CACHE.setdefault(spark, {})
+    per_session = _session_plans(spark)
     if per_session.get("__views__") != key:
         for name, df in dfs.items():
             df.createOrReplaceTempView(name)

@@ -534,11 +534,11 @@ class TxTableWriter(DataSourceArrowWriter):
 
     def commit(self, messages):
         from pulsar_project_spark.sources.txlog import (
+            _COMMIT_RETRIES,
             TxConflict,
-            _commit,
+            _assign_row_ids,
+            _cas,
             _merged_stats,
-            _tracked_append_rids,
-            tx_snapshot,
         )
 
         staging = os.path.join(self._table, "_staging", self._sid)
@@ -573,8 +573,9 @@ class TxTableWriter(DataSourceArrowWriter):
         gens = self._gens
         new_files = [n for n, _ in staged]
         counts = dict(staged)
-        for _ in range(8):
-            snap = tx_snapshot(self._table)
+
+        def attempt(snap):
+            nonlocal validated
             if snap.get("generated", {}) != gens:
                 raise TxConflict(
                     f"{self._table}: generated-column set changed "
@@ -585,20 +586,15 @@ class TxTableWriter(DataSourceArrowWriter):
                          if validated.get(n) != p}
                 self._validate(paths, delta, {})
                 validated = cs
-            new_rids, hwm = _tracked_append_rids(snap, new_files, counts)
-            try:
-                _commit(self._table, snap["version"],
-                        snap["files"] + new_files, op="append",
+            new_rids, hwm = (_assign_row_ids(snap, new_files, counts)
+                             if snap.get("rids") else (None, None))
+            return dict(files=snap["files"] + new_files, op="append",
                         stats=(_merged_stats(snap, snap["files"], {})
                                if snap.get("stats") else None),
-                        dvs=snap.get("dvs"),
-                        add_schema=add_schema,
+                        dvs=snap.get("dvs"), add_schema=add_schema,
                         rids=new_rids, row_hwm=hwm)
-                return
-            except TxConflict:
-                continue
-        raise TxConflict(
-            f"tx_table write lost 8 CAS races in {self._table}")
+
+        _cas(self._table, "tx_table write", _COMMIT_RETRIES, attempt)
 
     def abort(self, messages):
         import shutil

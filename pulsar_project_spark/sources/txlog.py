@@ -46,6 +46,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 import uuid
 
@@ -98,19 +99,23 @@ def tx_snapshot(table: str, version: int | None = None) -> dict:
         return json.load(fh)
 
 
+# Table metadata every commit carries forward from its parent unless it
+# passes a replacement (``None`` = carry): CHECK constraints, the rename
+# chain, the drop list, the widening type map, row tracking's id bases
+# and high-water-mark, and the generated-column map. Stale ``rids``
+# entries for files a commit removed are harmless (readers iterate the
+# manifest's live file list, never the rids keys).
+_CARRIED = ("constraints", "renames", "drops", "types", "rids", "row_hwm",
+            "generated")
+
+
 def _commit(table: str, expected_parent: int | None,
             files: list[str], op: str,
             txn: dict | None = None,
             stats: dict | None = None,
             dvs: dict | None = None,
-            constraints: dict | None = None,
-            renames: list | None = None,
-            drops: list | None = None,
-            types: dict | None = None,
             add_schema: dict | None = None,
-            rids: dict | None = None,
-            row_hwm: int | None = None,
-            generated: dict | None = None) -> int:
+            **carried) -> int:
     """Atomically commit ``files`` as version expected_parent+1.
 
     Write the manifest fully (fsync'd) to a dot-tmp name, then
@@ -119,66 +124,41 @@ def _commit(table: str, expected_parent: int | None,
     (writer-transaction id, see ``tx_append_txn``) rides inside the
     manifest so idempotency-check and commit share the CAS. ``dvs``
     maps data-file name → deletion-vector file name (merge-on-read
-    DELETE, see ``tx_delete_range_dv``). Every manifest also carries a
+    DELETE, see ``tx_delete_range_dv``). ``txn``, ``stats`` and ``dvs``
+    describe this commit only; the ``_CARRIED`` keys (``carried``)
+    default to the parent's. Every manifest also carries a
     MONOTONIC commit timestamp ``ts_us`` (max of wall clock and
     parent's ts_us + 1, so a clock step backwards can never produce an
     out-of-order label) — the resolution key for AS OF TIMESTAMP time
     travel (``tx_version_as_of_timestamp``)."""
+    unknown = set(carried) - set(_CARRIED)
+    if unknown:
+        raise TypeError(f"_commit: unknown table metadata {sorted(unknown)}")
     version = 0 if expected_parent is None else expected_parent + 1
-    parent_ts = 0
-    parent_constraints: dict = {}
-    parent_renames: list = []
-    parent_drops: list = []
-    parent_types: dict = {}
-    parent_schema: dict = {}
-    parent_rids: dict = {}
-    parent_hwm: int | None = None
-    parent_generated: dict = {}
+    parent: dict = {}
     if expected_parent is not None:
         try:
             with open(_manifest_path(table, expected_parent)) as fh:
-                pm = json.load(fh)
-            parent_ts = pm.get("ts_us", 0)
-            # CHECK constraints are TABLE metadata, not commit payload:
-            # every commit carries them forward unless the commit
-            # explicitly replaces the set (tx_set/drop_constraint)
-            parent_constraints = pm.get("constraints", {})
-            parent_renames = pm.get("renames", [])
-            parent_drops = pm.get("drops", [])
-            parent_types = pm.get("types", {})
-            parent_schema = pm.get("schema", {})
-            # row tracking: base-id map and high-water-mark are TABLE
-            # metadata like constraints — carried forward verbatim
-            # unless the commit explicitly replaces them. Stale entries
-            # for files a commit removed are harmless (readers iterate
-            # the manifest's live file list, never the rids keys).
-            parent_rids = pm.get("rids", {})
-            parent_hwm = pm.get("row_hwm")
-            parent_generated = pm.get("generated", {})
+                parent = json.load(fh)
         except FileNotFoundError:
             # vacuum dropped the parent manifest; monotonicity then
             # rests on the wall clock alone (documented in tx_vacuum)
-            parent_ts = 0
+            pass
     manifest = {
         "version": version,
         "parent": expected_parent,
         "op": op,
-        "ts_us": max(parent_ts + 1, time.time_ns() // 1_000),
+        "ts_us": max(parent.get("ts_us", 0) + 1, time.time_ns() // 1_000),
         "files": sorted(files),
     }
-    effective_constraints = (constraints if constraints is not None
-                             else parent_constraints)
-    if effective_constraints:
-        manifest["constraints"] = effective_constraints
-    effective_renames = renames if renames is not None else parent_renames
-    if effective_renames:
-        manifest["renames"] = effective_renames
-    effective_drops = drops if drops is not None else parent_drops
-    if effective_drops:
-        manifest["drops"] = effective_drops
-    effective_types = types if types is not None else parent_types
-    if effective_types:
-        manifest["types"] = effective_types
+    for key in _CARRIED:
+        value = carried.get(key)
+        if value is None:
+            value = parent.get(key)
+        # empty metadata stays out of the manifest; a row_hwm of 0 is
+        # a real high-water-mark
+        if value or (key == "row_hwm" and value is not None):
+            manifest[key] = value
     # the manifest records the MONOTONE UNION of every physical column
     # ever staged (name → Spark simpleString): the read planner can then
     # build a widened explicit schema from metadata alone, with zero
@@ -186,21 +166,9 @@ def _commit(table: str, expected_parent: int | None,
     # property the stats bounds give pruning. Stale names (retired by
     # compaction through renames/drops) are harmless: reads null-fill
     # then coalesce/project them away.
-    effective_schema = dict(parent_schema)
-    if add_schema:
-        effective_schema.update(add_schema)
-    if effective_schema:
-        manifest["schema"] = effective_schema
-    effective_rids = rids if rids is not None else parent_rids
-    if effective_rids:
-        manifest["rids"] = effective_rids
-    effective_hwm = row_hwm if row_hwm is not None else parent_hwm
-    if effective_hwm is not None:
-        manifest["row_hwm"] = effective_hwm
-    effective_generated = (generated if generated is not None
-                           else parent_generated)
-    if effective_generated:
-        manifest["generated"] = effective_generated
+    schema = {**parent.get("schema", {}), **(add_schema or {})}
+    if schema:
+        manifest["schema"] = schema
     if txn is not None:
         manifest["txn"] = txn
     if stats is not None:
@@ -222,6 +190,43 @@ def _commit(table: str, expected_parent: int | None,
     finally:
         os.unlink(tmp)
     return version
+
+
+# CAS retry bounds: rewrite ops (compact, optimize, delete, dv-delete,
+# update, merges, reorg) redo their Spark work on every retry, so they
+# give up sooner than appends and metadata-only commits.
+_REWRITE_RETRIES = 3
+_COMMIT_RETRIES = 8
+
+
+def _cas(table: str, what: str, retries: int, attempt) -> int:
+    """The optimistic commit loop every writer shares: read the latest
+    snapshot, let ``attempt(snap)`` plan against it, and commit the plan
+    as the snapshot's successor. ``attempt`` returns either a finished
+    version (nothing to commit: a no-op, an already-landed txn id) or
+    the ``_commit`` keyword arguments of its plan. Only a lost race —
+    ``_commit`` finding its version taken — re-plans, from the winner's
+    snapshot; anything ``attempt`` raises, a ``TxConflict`` of its own
+    included, reaches the caller at once. Raises ``TxConflict`` after
+    ``retries`` lost races."""
+    for _ in range(retries):
+        snap = tx_snapshot(table)
+        plan = attempt(snap)
+        if isinstance(plan, int):
+            return plan
+        try:
+            return _commit(table, snap["version"], **plan)
+        except TxConflict:
+            continue
+    raise TxConflict(f"{what} lost {retries} CAS races in {table}")
+
+
+def _metadata_commit(snap: dict, op: str, **carried) -> dict:
+    """The ``_commit`` plan of a metadata-only op: the snapshot's files,
+    stats and deletion vectors unchanged, the ``carried`` table
+    metadata replaced."""
+    return dict(files=list(snap["files"]), op=op, stats=snap.get("stats"),
+                dvs=snap.get("dvs"), **carried)
 
 
 def _stage_dataframe(df: DataFrame, table: str,
@@ -248,10 +253,24 @@ def _stage_dataframe(df: DataFrame, table: str,
     staged = os.path.join(table, _STAGING_DIR, sid)
     out = ((df.repartition(n_files) if shuffle else df.coalesce(n_files))
            if n_files else df)
-    out.write.mode("overwrite").parquet(staged)
+    # one file per task, whatever the session's maxRecordsPerFile: the
+    # duplicate check below relies on it
+    out.write.mode("overwrite").option("maxRecordsPerFile", "0") \
+        .parquet(staged)
     names = []
     parts = sorted(f for f in os.listdir(staged)
                    if f.endswith(".parquet") and not f.startswith("."))
+    # committer v2 promotes task output at task commit, which is not
+    # atomic (MAPREDUCE-7282): a retried task commit can leave two
+    # files for one task. Publishing both would duplicate its rows.
+    seen: dict[str, str] = {}
+    for part in parts:
+        task = re.match(r"part-(\d+)-", part)
+        if task and seen.setdefault(task.group(1), part) != part:
+            raise RuntimeError(
+                f"{table}: staged output {staged} holds two files for "
+                f"task {task.group(1)} ({seen[task.group(1)]}, {part}); "
+                "refusing to commit a duplicated task output")
     for i, part in enumerate(parts):
         name = f"{sid}-{i:05d}.parquet"
         os.rename(os.path.join(staged, part), os.path.join(table, name))
@@ -263,47 +282,83 @@ def _stage_dataframe(df: DataFrame, table: str,
     return names
 
 
-def tx_append(df: DataFrame, table: str, n_files: int | None = None,
-              max_retries: int = 8) -> int:
-    """Append ``df`` as new immutable files; returns the new version.
-    Stage once, then CAS-commit with rebase on conflict (an append
-    composes with any concurrent commit — the file list is re-read and
-    the new files re-added on top). CHECK constraints are enforced on
-    the incoming rows before a byte is staged; generated columns are
-    computed/validated first (``_apply_generated``)."""
+def _append(df: DataFrame, table: str, op: str,
+            n_files: int | None = None, shuffle: bool = False,
+            shape=None, fresh_stats=None, txn: dict | None = None,
+            row_ids: str = "never") -> int:
+    """The one append body behind every ``tx_append*`` writer.
+
+    Generated columns are computed/validated and CHECK constraints
+    enforced on the incoming rows before a byte is staged; the staged
+    files then CAS-commit with rebase on conflict (an append composes
+    with any concurrent commit — the file list is re-read and the new
+    files re-added on top). Inside each retry the snapshot's
+    constraints and generators are re-checked: a constraint committed
+    between validation and a retry still binds the write (ADVICE r8
+    TOCTOU), and a generator landing mid-flight aborts it, since the
+    staged files were not written under it. Existing per-file stats
+    and deletion vectors carry forward (ADVICE r7: a plain append must
+    not erase the stats machinery; new files without bounds are read
+    conservatively).
+
+    What differs per writer: ``shape`` (DataFrame → DataFrame, applied
+    after the generators), ``n_files``/``shuffle`` for the staging
+    write, ``fresh_stats`` (staged names → per-file stats, asked for
+    only by writers that record them), the ``txn`` id (``(app,
+    batch)``: a landed id makes the append a no-op, checked before
+    staging and in every retry), the ``op`` label, and ``row_ids``:
+    ``"always"`` assigns row-tracking ids, ``"inherit"`` assigns them
+    when the table is already tracked, ``"never"`` leaves the new files
+    untracked. Footers are read for row counts only when ids are
+    assigned."""
+    if txn is not None:
+        done = tx_txn_version(table, txn["app"], txn["batch"])
+        if done is not None:
+            return done
     gens = tx_generated(table)
     df = _apply_generated(df, table, gens)
     validated = tx_constraints(table)
     _enforce_constraints(df, table, validated)
-    new_files = _stage_dataframe(df, table, n_files)
-    for _ in range(max_retries):
-        snap = tx_snapshot(table)
+    new_files = _stage_dataframe(shape(df) if shape else df, table,
+                                 n_files, shuffle=shuffle)
+    fresh = fresh_stats(new_files) if fresh_stats else {}
+    schema = _df_schema_map(df)
+    counts = None
+
+    def attempt(snap):
+        nonlocal validated, counts
+        if txn is not None:
+            done = tx_txn_version(table, txn["app"], txn["batch"])
+            if done is not None:
+                return done  # a concurrent replay won; our staged files
+                # are unreferenced orphans, reclaimed by vacuum
         if snap.get("generated", {}) != gens:
-            # a generator landed mid-flight: the staged files were not
-            # written under it and cannot rebase — caller retries whole
             raise TxConflict(
                 f"{table}: generated-column set changed during append")
-        # a constraint committed between our validation and a conflict
-        # retry must still bind this write (ADVICE r8 TOCTOU): re-check
-        # whenever the snapshot's set differs from the one we validated
         cs = snap.get("constraints", {})
         if cs != validated:
             _enforce_constraints(df, table, cs)
             validated = cs
-        try:
-            # carry existing per-file bounds forward (ADVICE r7: a plain
-            # append must not erase the manifest-stats machinery —
-            # the new files simply have no recorded bounds, which the
-            # pruned read already treats as conservatively-kept)
-            return _commit(
-                table, snap["version"], snap["files"] + new_files,
-                op="append",
-                stats=(_merged_stats(snap, snap["files"], {})
-                       if snap.get("stats") else None),
-                dvs=snap.get("dvs"), add_schema=_df_schema_map(df))
-        except TxConflict:
-            continue
-    raise TxConflict(f"append lost {max_retries} CAS races in {table}")
+        rids = hwm = None
+        if row_ids == "always" or (row_ids == "inherit" and snap.get("rids")):
+            if counts is None:
+                counts = {n: _parquet_num_rows(os.path.join(table, n))
+                          for n in new_files}
+            rids, hwm = _assign_row_ids(snap, new_files, counts)
+        return dict(
+            files=snap["files"] + new_files, op=op, txn=txn,
+            stats=(_merged_stats(snap, snap["files"], fresh)
+                   if snap.get("stats") or fresh else None),
+            dvs=snap.get("dvs"), add_schema=schema,
+            rids=rids, row_hwm=hwm)
+
+    return _cas(table, op, _COMMIT_RETRIES, attempt)
+
+
+def tx_append(df: DataFrame, table: str, n_files: int | None = None) -> int:
+    """Append ``df`` as new immutable files; returns the new version
+    (see ``_append`` for staging, validation and the CAS rebase)."""
+    return _append(df, table, "append", n_files)
 
 
 def _read_files_masked(spark: SparkSession, table: str, snap: dict,
@@ -424,8 +479,7 @@ def plan_compaction(table: str, target_bytes: int) -> list[list[str]]:
     return [b for b in buckets.values() if len(b) > 1]
 
 
-def tx_compact(spark: SparkSession, table: str, target_bytes: int,
-               max_retries: int = 3) -> int:
+def tx_compact(spark: SparkSession, table: str, target_bytes: int) -> int:
     """EXECUTE compaction transactionally: rewrite each multi-file
     bucket into one file, then commit a manifest that swaps the bucket
     inputs for the rewritten outputs. Readers of any already-committed
@@ -435,8 +489,7 @@ def tx_compact(spark: SparkSession, table: str, target_bytes: int,
     plan and CAS re-plans from the new snapshot (the input file set
     changed under us). Returns the committed version (or the current
     one when nothing needs merging)."""
-    for _ in range(max_retries):
-        snap = tx_snapshot(table)
+    def attempt(snap):
         merge_buckets = plan_compaction(table, target_bytes)
         if not merge_buckets:
             return snap["version"]
@@ -504,15 +557,12 @@ def tx_compact(spark: SparkSession, table: str, target_bytes: int,
             new_rids = {n: b for n, b in snap["rids"].items() if n in keep}
             for n in produced:
                 new_rids[n] = None  # ids are materialized in the file
-        try:
-            return _commit(table, snap["version"], keep + produced,
-                           op="compact", stats=stats,
-                           dvs=keep_dvs or None,
-                           add_schema=staged_schema,
-                           rids=new_rids)
-        except TxConflict:
-            continue  # somebody committed: re-plan against their files
-    raise TxConflict(f"compaction lost {max_retries} CAS races in {table}")
+        return dict(files=keep + produced, op="compact", stats=stats,
+                    dvs=keep_dvs or None, add_schema=staged_schema,
+                    rids=new_rids)
+
+    # a lost race re-plans against the winner's files
+    return _cas(table, "compaction", _REWRITE_RETRIES, attempt)
 
 
 def _known_txns(table: str) -> dict:
@@ -618,7 +668,6 @@ def tx_vacuum(table: str, retention_seconds: float = 86400.0) -> int:
 
 def tx_optimize_zorder(spark: SparkSession, table: str, col_a: str,
                        col_b: str, n_files: int = 8,
-                       max_retries: int = 3,
                        record_stats: bool = True) -> int:
     """OPTIMIZE ... ZORDER BY (a, b): rewrite the whole snapshot
     Z-clustered — norm16-normalize both dims by their observed bounds
@@ -634,8 +683,7 @@ def tx_optimize_zorder(spark: SparkSession, table: str, col_a: str,
 
     from pulsar_project_spark.operators.layout import norm16_sql, zvalue
 
-    for _ in range(max_retries):
-        snap = tx_snapshot(table)
+    def attempt(snap):
         if not snap["files"]:
             return snap["version"]
         # row-tracked tables: the rewrite MATERIALIZES ids (same rule
@@ -676,15 +724,12 @@ def tx_optimize_zorder(spark: SparkSession, table: str, col_a: str,
                 blooms = _build_blooms(table, produced, col)
                 for n in produced:
                     stats.setdefault(n, {})[_BLOOM_PREFIX + col] = blooms[n]
-        try:
-            return _commit(table, snap["version"], produced,
-                           op="optimize-zorder", stats=stats,
-                           add_schema=_df_schema_map(df),
-                           rids=({n: None for n in produced}
-                                 if tracked else None))
-        except TxConflict:
-            continue  # staged files orphaned; vacuum reclaims them
-    raise TxConflict(f"optimize lost {max_retries} CAS races in {table}")
+        # on a lost race the staged files are orphans; vacuum reclaims them
+        return dict(files=produced, op="optimize-zorder", stats=stats,
+                    add_schema=_df_schema_map(df),
+                    rids={n: None for n in produced} if tracked else None)
+
+    return _cas(table, "optimize", _REWRITE_RETRIES, attempt)
 
 
 def tx_txn_version(table: str, app: str, batch: int) -> int | None:
@@ -710,8 +755,7 @@ def tx_txn_version(table: str, app: str, batch: int) -> int | None:
 
 
 def tx_append_txn(df: DataFrame, table: str, app: str, batch: int,
-                  n_files: int | None = None, max_retries: int = 8,
-                  shuffle: bool = False) -> int:
+                  n_files: int | None = None, shuffle: bool = False) -> int:
     """IDEMPOTENT append keyed by writer-transaction id ``(app,
     batch)`` — the Delta `txn` pattern that makes a streaming
     foreachBatch sink exactly-once: Structured Streaming replays a
@@ -723,40 +767,8 @@ def tx_append_txn(df: DataFrame, table: str, app: str, batch: int,
     append path (ADVICE r9: an exactly-once sink must not be the one
     door through which rows contradicting a declared generator can
     enter and poison derived pruning)."""
-    done = tx_txn_version(table, app, batch)
-    if done is not None:
-        return done
-    gens = tx_generated(table)
-    df = _apply_generated(df, table, gens)
-    validated = tx_constraints(table)
-    _enforce_constraints(df, table, validated)
-    new_files = _stage_dataframe(df, table, n_files, shuffle=shuffle)
-    for _ in range(max_retries):
-        done = tx_txn_version(table, app, batch)
-        if done is not None:
-            return done  # concurrent replay won; our staged files are
-            # unreferenced orphans, reclaimed by vacuum
-        snap = tx_snapshot(table)
-        if snap.get("generated", {}) != gens:
-            # a generator landed mid-flight: the staged files were not
-            # written under it and cannot rebase — caller retries whole
-            raise TxConflict(
-                f"{table}: generated-column set changed during append")
-        cs = snap.get("constraints", {})
-        if cs != validated:  # constraint landed mid-retry (TOCTOU)
-            _enforce_constraints(df, table, cs)
-            validated = cs
-        try:
-            return _commit(table, snap["version"],
-                           snap["files"] + new_files, op="append",
-                           txn={"app": app, "batch": batch},
-                           stats=(_merged_stats(snap, snap["files"], {})
-                                  if snap.get("stats") else None),
-                           dvs=snap.get("dvs"),
-                           add_schema=_df_schema_map(df))
-        except TxConflict:
-            continue
-    raise TxConflict(f"txn append lost {max_retries} CAS races in {table}")
+    return _append(df, table, "append", n_files, shuffle=shuffle,
+                   txn={"app": app, "batch": batch})
 
 
 def _stat_value(v):
@@ -976,8 +988,8 @@ def tx_read_pruned(spark: SparkSession, table: str, col: str,
             len(chosen), len(snap["files"]))
 
 
-def tx_delete_range(spark: SparkSession, table: str, col: str, lo, hi,
-                    max_retries: int = 3) -> int:
+def tx_delete_range(spark: SparkSession, table: str, col: str,
+                    lo, hi) -> int:
     """Copy-on-write DELETE WHERE col BETWEEN lo AND hi: the manifest's
     column bounds pick the files that can contain matches (files
     without recorded bounds are conservatively rewritten), ONLY those
@@ -991,8 +1003,8 @@ def tx_delete_range(spark: SparkSession, table: str, col: str, lo, hi,
     from pyspark.sql import functions as F
 
     nlo, nhi = _stat_value(lo), _stat_value(hi)
-    for _ in range(max_retries):
-        snap = tx_snapshot(table)
+
+    def attempt(snap):
         stats = snap.get("stats", {})
         chain = snap.get("renames", [])
         affected, kept = [], []
@@ -1026,15 +1038,13 @@ def tx_delete_range(spark: SparkSession, table: str, col: str, lo, hi,
             new_rids = {n: b for n, b in snap["rids"].items() if n in kept}
             for n in produced:
                 new_rids[n] = None  # ids are materialized in the file
-        try:
-            return _commit(
-                table, snap["version"], kept + produced, op="delete",
-                stats=_merged_stats(snap, kept, fresh) if stats else None,
-                dvs=keep_dvs or None, add_schema=_df_schema_map(survivors),
-                rids=new_rids)
-        except TxConflict:
-            continue
-    raise TxConflict(f"delete lost {max_retries} CAS races in {table}")
+        return dict(
+            files=kept + produced, op="delete",
+            stats=_merged_stats(snap, kept, fresh) if stats else None,
+            dvs=keep_dvs or None, add_schema=_df_schema_map(survivors),
+            rids=new_rids)
+
+    return _cas(table, "delete", _REWRITE_RETRIES, attempt)
 
 
 def _regenerate_updated(df: DataFrame, table: str, gens: dict,
@@ -1103,7 +1113,7 @@ def _union_gen_tolerant(a: DataFrame, b: DataFrame,
 
 
 def tx_update(spark: SparkSession, table: str, col: str, lo, hi,
-              set_exprs: dict[str, str], max_retries: int = 3) -> int:
+              set_exprs: dict[str, str]) -> int:
     """Copy-on-write UPDATE ... SET <expr> WHERE col BETWEEN lo AND hi —
     the DML-roster member between DELETE (drop matching rows) and MERGE
     (replace by key): matching rows are rewritten IN PLACE with
@@ -1126,8 +1136,8 @@ def tx_update(spark: SparkSession, table: str, col: str, lo, hi,
     from pyspark.sql import functions as F
 
     nlo, nhi = _stat_value(lo), _stat_value(hi)
-    for _ in range(max_retries):
-        snap = tx_snapshot(table)
+
+    def attempt(snap):
         stats = snap.get("stats", {})
         chain = snap.get("renames", [])
         affected, kept = [], []
@@ -1193,19 +1203,17 @@ def tx_update(spark: SparkSession, table: str, col: str, lo, hi,
             new_rids = {n: b for n, b in snap["rids"].items() if n in kept}
             for n in produced:
                 new_rids[n] = None  # ids are materialized in the file
-        try:
-            return _commit(
-                table, snap["version"], kept + produced, op="update",
-                stats=_merged_stats(snap, kept, fresh) if stats else None,
-                dvs=keep_dvs or None, add_schema=_df_schema_map(updated),
-                rids=new_rids)
-        except TxConflict:
-            continue
-    raise TxConflict(f"update lost {max_retries} CAS races in {table}")
+        return dict(
+            files=kept + produced, op="update",
+            stats=_merged_stats(snap, kept, fresh) if stats else None,
+            dvs=keep_dvs or None, add_schema=_df_schema_map(updated),
+            rids=new_rids)
+
+    return _cas(table, "update", _REWRITE_RETRIES, attempt)
 
 
 def tx_merge_upsert(spark: SparkSession, table: str, updates: DataFrame,
-                    key_col: str, max_retries: int = 3) -> int:
+                    key_col: str) -> int:
     """Copy-on-write MERGE (upsert) keyed on ``key_col``: the updates'
     observed key range picks the files that can contain matching keys
     (manifest bounds; files without bounds conservatively rewritten),
@@ -1241,8 +1249,9 @@ def tx_merge_upsert(spark: SparkSession, table: str, updates: DataFrame,
     validated = tx_constraints(table)
     _enforce_constraints(updates, table, validated)
     nulo, nuhi = _stat_value(ulo), _stat_value(uhi)
-    for _ in range(max_retries):
-        snap = tx_snapshot(table)
+
+    def attempt(snap):
+        nonlocal validated
         if snap.get("generated", {}) != gens:
             # a generator landed mid-flight: the update rows were not
             # computed/validated under it and cannot rebase
@@ -1319,15 +1328,13 @@ def tx_merge_upsert(spark: SparkSession, table: str, updates: DataFrame,
                  if stat_cols else {})
         keep_dvs = {n: d for n, d in snap.get("dvs", {}).items()
                     if n in kept}
-        try:
-            return _commit(
-                table, snap["version"], kept + produced, op="merge",
-                stats=_merged_stats(snap, kept, fresh) if stats else None,
-                dvs=keep_dvs or None, add_schema=_df_schema_map(merged),
-                rids=new_rids, row_hwm=hwm)
-        except TxConflict:
-            continue
-    raise TxConflict(f"merge lost {max_retries} CAS races in {table}")
+        return dict(
+            files=kept + produced, op="merge",
+            stats=_merged_stats(snap, kept, fresh) if stats else None,
+            dvs=keep_dvs or None, add_schema=_df_schema_map(merged),
+            rids=new_rids, row_hwm=hwm)
+
+    return _cas(table, "merge", _REWRITE_RETRIES, attempt)
 
 
 def tx_clone(src: str, dst: str, version: int | None = None) -> int:
@@ -1371,8 +1378,7 @@ def tx_clone(src: str, dst: str, version: int | None = None) -> int:
 
 
 def tx_append_clustered(df: DataFrame, table: str,
-                        cluster_cols: list[str], n_files: int = 4,
-                        max_retries: int = 8) -> int:
+                        cluster_cols: list[str], n_files: int = 4) -> int:
     """Append ``df`` range-clustered on ``cluster_cols`` with per-file
     manifest bounds — PARTITION-SPEC EVOLUTION, the Iceberg property
     that a bare Hive layout cannot give: each GENERATION of files may
@@ -1381,38 +1387,16 @@ def tx_append_clustered(df: DataFrame, table: str,
     recorded bounds PER FILE rather than parsing one directory layout.
     Re-speccing a 100 TB table therefore costs nothing for existing
     data — old generations stay readable and prunable under the bounds
-    they were written with; only new files get the new clustering."""
-    gens = tx_generated(table)
-    df = _apply_generated(df, table, gens)  # may ADD the cluster col
-    validated = tx_constraints(table)
-    _enforce_constraints(df, table, validated)
-    out = (df.repartitionByRange(n_files, *cluster_cols)
-           .sortWithinPartitions(*cluster_cols))
-    new_files = _stage_dataframe(out, table, n_files=None)
-    fresh = _collect_file_stats(table, new_files, list(cluster_cols))
-    counts = {n: _parquet_num_rows(os.path.join(table, n))
-              for n in new_files}
-    for _ in range(max_retries):
-        snap = tx_snapshot(table)
-        if snap.get("generated", {}) != gens:
-            raise TxConflict(
-                f"{table}: generated-column set changed during append")
-        cs = snap.get("constraints", {})
-        if cs != validated:  # constraint landed mid-retry (TOCTOU)
-            _enforce_constraints(df, table, cs)
-            validated = cs
-        new_rids, hwm = _tracked_append_rids(snap, new_files, counts)
-        try:
-            return _commit(
-                table, snap["version"], snap["files"] + new_files,
-                op="append-clustered",
-                stats=_merged_stats(snap, snap["files"], fresh),
-                add_schema=_df_schema_map(df),
-                rids=new_rids, row_hwm=hwm)
-        except TxConflict:
-            continue
-    raise TxConflict(
-        f"clustered append lost {max_retries} CAS races in {table}")
+    they were written with; only new files get the new clustering.
+    Clustering runs after the generators, which may ADD a cluster
+    column; new files get row ids when the table is tracked."""
+    return _append(
+        df, table, "append-clustered",
+        shape=lambda d: (d.repartitionByRange(n_files, *cluster_cols)
+                         .sortWithinPartitions(*cluster_cols)),
+        fresh_stats=lambda names: _collect_file_stats(
+            table, names, list(cluster_cols)),
+        row_ids="inherit")
 
 
 # ---------------------------------------------------------------------------
@@ -1477,8 +1461,8 @@ def tx_read_as_of_timestamp(spark: SparkSession, table: str,
     return tx_read(spark, table, tx_version_as_of_timestamp(table, ts_us))
 
 
-def tx_delete_range_dv(spark: SparkSession, table: str, col: str, lo, hi,
-                       max_retries: int = 3) -> int:
+def tx_delete_range_dv(spark: SparkSession, table: str, col: str,
+                       lo, hi) -> int:
     """MERGE-ON-READ DELETE (deletion vectors): instead of rewriting
     every file that can contain a match (``tx_delete_range``'s
     copy-on-write), record the matching rows' (file, row-position)
@@ -1500,8 +1484,8 @@ def tx_delete_range_dv(spark: SparkSession, table: str, col: str, lo, hi,
     from pyspark.sql import functions as F
 
     nlo, nhi = _stat_value(lo), _stat_value(hi)
-    for _ in range(max_retries):
-        snap = tx_snapshot(table)
+
+    def attempt(snap):
         stats = snap.get("stats", {})
         chain = snap.get("renames", [])
         dvs = dict(snap.get("dvs", {}))
@@ -1557,13 +1541,10 @@ def tx_delete_range_dv(spark: SparkSession, table: str, col: str, lo, hi,
         new_dvs = dict(dvs)
         for name in affected:
             new_dvs[name] = dv_name
-        try:
-            return _commit(table, snap["version"], snap["files"],
-                           op="delete-dv",
-                           stats=snap.get("stats"), dvs=new_dvs)
-        except TxConflict:
-            continue
-    raise TxConflict(f"dv delete lost {max_retries} CAS races in {table}")
+        return dict(files=snap["files"], op="delete-dv",
+                    stats=snap.get("stats"), dvs=new_dvs)
+
+    return _cas(table, "dv delete", _REWRITE_RETRIES, attempt)
 
 
 # ops whose commits change layout, never data — the change feed skips
@@ -1720,7 +1701,7 @@ def tx_typed_changes(spark: SparkSession, table: str, key_col: str,
     return feed.withColumn("_change_type", typed)
 
 
-def tx_restore(table: str, version: int, max_retries: int = 8) -> int:
+def tx_restore(table: str, version: int) -> int:
     """RESTORE TABLE ... TO VERSION AS OF — commit a NEW version whose
     content (files, bounds, deletion vectors) is the old snapshot's.
     Restore is a FORWARD commit, never a history rewrite: the bad
@@ -1738,23 +1719,19 @@ def tx_restore(table: str, version: int, max_retries: int = 8) -> int:
     reading wide (value-preserving over the narrow files), restoring
     past a rename keeps the current logical names."""
     snap_old = tx_snapshot(table, version)
-    for _ in range(max_retries):
-        cur = tx_snapshot(table)
+
+    def attempt(cur):
         if cur["version"] == version:
             return version
-        try:
-            # row tracking: the restored files' id bases come back with
-            # them; the hwm does NOT roll back (carry-forward keeps the
-            # CURRENT one, which is >= the old by monotonicity), so ids
-            # burned by the undone commits are never reissued
-            return _commit(table, cur["version"], list(snap_old["files"]),
-                           op=f"restore:v{version}",
-                           stats=snap_old.get("stats"),
-                           dvs=snap_old.get("dvs"),
-                           rids=snap_old.get("rids", {}))
-        except TxConflict:
-            continue
-    raise TxConflict(f"restore lost {max_retries} CAS races in {table}")
+        # row tracking: the restored files' id bases come back with
+        # them; the hwm does NOT roll back (carry-forward keeps the
+        # CURRENT one, which is >= the old by monotonicity), so ids
+        # burned by the undone commits are never reissued
+        return dict(files=list(snap_old["files"]), op=f"restore:v{version}",
+                    stats=snap_old.get("stats"), dvs=snap_old.get("dvs"),
+                    rids=snap_old.get("rids", {}))
+
+    return _cas(table, "restore", _COMMIT_RETRIES, attempt)
 
 
 def tx_history(spark: SparkSession, table: str) -> DataFrame:
@@ -1863,8 +1840,7 @@ def _build_blooms(table: str, names: list[str], col: str,
 
 
 def tx_append_bloomed(df: DataFrame, table: str, bloom_col: str,
-                      n_files: int | None = None,
-                      max_retries: int = 8) -> int:
+                      n_files: int | None = None) -> int:
     """Append with a PER-FILE BLOOM FILTER INDEX on ``bloom_col``
     (plus its min/max bounds) recorded in the manifest stats under
     ``__bloom__<col>`` — the key namespace keeps it out of every
@@ -1878,41 +1854,14 @@ def tx_append_bloomed(df: DataFrame, table: str, bloom_col: str,
     negatives by construction (every stored value was inserted), so
     correctness never depends on the filter; the residual predicate
     re-applies exactness."""
-    gens = tx_generated(table)
-    df = _apply_generated(df, table, gens)
-    validated = tx_constraints(table)
-    _enforce_constraints(df, table, validated)
-    new_files = _stage_dataframe(df, table, n_files)
-    bounds = _collect_file_stats(table, new_files, [bloom_col])
-    blooms = _build_blooms(table, new_files, bloom_col)
-    fresh = {}
-    for n in new_files:
-        ent = dict(bounds.get(n, {}))
-        ent[_BLOOM_PREFIX + bloom_col] = blooms[n]
-        fresh[n] = ent
-    counts = {n: _parquet_num_rows(os.path.join(table, n))
-              for n in new_files}
-    for _ in range(max_retries):
-        snap = tx_snapshot(table)
-        if snap.get("generated", {}) != gens:
-            raise TxConflict(
-                f"{table}: generated-column set changed during append")
-        cs = snap.get("constraints", {})
-        if cs != validated:  # constraint landed mid-retry (TOCTOU)
-            _enforce_constraints(df, table, cs)
-            validated = cs
-        new_rids, hwm = _tracked_append_rids(snap, new_files, counts)
-        try:
-            return _commit(
-                table, snap["version"], snap["files"] + new_files,
-                op="append-bloomed",
-                stats=_merged_stats(snap, snap["files"], fresh),
-                dvs=snap.get("dvs"), add_schema=_df_schema_map(df),
-                rids=new_rids, row_hwm=hwm)
-        except TxConflict:
-            continue
-    raise TxConflict(
-        f"bloomed append lost {max_retries} CAS races in {table}")
+    def fresh_stats(names):
+        stats = _collect_file_stats(table, names, [bloom_col])
+        blooms = _build_blooms(table, names, bloom_col)
+        return {n: {**stats.get(n, {}), _BLOOM_PREFIX + bloom_col: blooms[n]}
+                for n in names}
+
+    return _append(df, table, "append-bloomed", n_files,
+                   fresh_stats=fresh_stats, row_ids="inherit")
 
 
 def tx_read_bloom_point(spark: SparkSession, table: str, col: str,
@@ -2014,7 +1963,7 @@ def _enforce_constraints(df: DataFrame, table: str,
 
 
 def tx_set_constraint(spark: SparkSession, table: str, name: str,
-                      predicate: str, max_retries: int = 8) -> int:
+                      predicate: str) -> int:
     """ADD CONSTRAINT ``name`` CHECK (``predicate``): validates the
     CURRENT table contents first (one scan — a constraint that the
     existing data already violates is a lie, Delta rejects it too),
@@ -2022,62 +1971,43 @@ def tx_set_constraint(spark: SparkSession, table: str, name: str,
     Every subsequent write through any writer in this module validates
     against it at commit time and is REJECTED whole (no partial
     ingestion) on violation."""
-    for _ in range(max_retries):
-        snap = tx_snapshot(table)
-        cs = dict(snap.get("constraints", {}))
-        cs[name] = predicate
+    def attempt(snap):
         if snap["files"]:
             _enforce_constraints(
                 _read_files_masked(spark, table, snap, snap["files"]),
                 table, {name: predicate})
-        try:
-            return _commit(table, snap["version"], list(snap["files"]),
-                           op=f"set-constraint:{name}",
-                           stats=snap.get("stats"), dvs=snap.get("dvs"),
-                           constraints=cs)
-        except TxConflict:
-            continue
-    raise TxConflict(
-        f"set-constraint lost {max_retries} CAS races in {table}")
+        return _metadata_commit(
+            snap, f"set-constraint:{name}",
+            constraints={**snap.get("constraints", {}), name: predicate})
+
+    return _cas(table, "set-constraint", _COMMIT_RETRIES, attempt)
 
 
-def tx_drop_constraint(table: str, name: str, max_retries: int = 8) -> int:
+def tx_drop_constraint(table: str, name: str) -> int:
     """DROP CONSTRAINT ``name`` (missing name is a no-op, idempotent)."""
-    for _ in range(max_retries):
-        snap = tx_snapshot(table)
+    def attempt(snap):
         cs = dict(snap.get("constraints", {}))
         cs.pop(name, None)
-        try:
-            return _commit(table, snap["version"], list(snap["files"]),
-                           op=f"drop-constraint:{name}",
-                           stats=snap.get("stats"), dvs=snap.get("dvs"),
-                           constraints=cs)
-        except TxConflict:
-            continue
-    raise TxConflict(
-        f"drop-constraint lost {max_retries} CAS races in {table}")
+        return _metadata_commit(snap, f"drop-constraint:{name}",
+                                constraints=cs)
+
+    return _cas(table, "drop-constraint", _COMMIT_RETRIES, attempt)
 
 
-def tx_drop_generated(table: str, col: str, max_retries: int = 8) -> int:
+def tx_drop_generated(table: str, col: str) -> int:
     """Drop the generator declaration on ``col`` (missing is a no-op,
     idempotent). Metadata-only: stored values stay — they were
     validated while the generator was live, so plain pruning on the
     column remains sound; only predicate DERIVATION from the base
     stops. This is the unlock for renaming/dropping a column that
     participates in a generator."""
-    for _ in range(max_retries):
-        snap = tx_snapshot(table)
+    def attempt(snap):
         gens = dict(snap.get("generated", {}))
         gens.pop(col, None)
-        try:
-            return _commit(table, snap["version"], list(snap["files"]),
-                           op=f"drop-generated:{col}",
-                           stats=snap.get("stats"), dvs=snap.get("dvs"),
-                           generated=gens)
-        except TxConflict:
-            continue
-    raise TxConflict(
-        f"drop-generated lost {max_retries} CAS races in {table}")
+        return _metadata_commit(snap, f"drop-generated:{col}",
+                                generated=gens)
+
+    return _cas(table, "drop-generated", _COMMIT_RETRIES, attempt)
 
 
 def tx_detail(spark: SparkSession, table: str,
@@ -2153,8 +2083,7 @@ def _apply_renames(df: DataFrame, chain: list) -> DataFrame:
     return df
 
 
-def tx_rename_column(table: str, old: str, new: str,
-                     max_retries: int = 8) -> int:
+def tx_rename_column(table: str, old: str, new: str) -> int:
     """RENAME COLUMN without rewriting a byte — read-time column
     mapping (the Delta column-mapping property reduced to its
     correctness core): the manifest carries an ordered rename chain
@@ -2178,8 +2107,8 @@ def tx_rename_column(table: str, old: str, new: str,
         raise ValueError(
             f"{_RID} is reserved for row tracking and cannot be renamed "
             "or renamed onto")
-    for _ in range(max_retries):
-        snap = tx_snapshot(table)
+
+    def attempt(snap):
         # the generated map is keyed by NAME (col and base): renaming
         # either side would leave the generator pointing at a ghost —
         # later writes would fail demanding the old base, and derived
@@ -2221,17 +2150,13 @@ def tx_rename_column(table: str, old: str, new: str,
         types = dict(snap.get("types", {}))
         if old in types:
             types[new] = types.pop(old)
-        try:
-            return _commit(table, snap["version"], list(snap["files"]),
-                           op=f"rename:{old}->{new}",
-                           stats=snap.get("stats"), dvs=snap.get("dvs"),
-                           renames=chain, types=types)
-        except TxConflict:
-            continue
-    raise TxConflict(f"rename lost {max_retries} CAS races in {table}")
+        return _metadata_commit(snap, f"rename:{old}->{new}",
+                                renames=chain, types=types)
+
+    return _cas(table, "rename", _COMMIT_RETRIES, attempt)
 
 
-def tx_drop_column(table: str, col: str, max_retries: int = 8) -> int:
+def tx_drop_column(table: str, col: str) -> int:
     """DROP COLUMN without rewriting a byte — the column-mapping
     sibling of ``tx_rename_column``: the manifest carries a drop list
     every commit forwards; reads resolve renames FIRST, then project
@@ -2247,11 +2172,9 @@ def tx_drop_column(table: str, col: str, max_retries: int = 8) -> int:
     generator base is rejected the same way — the generator map is
     keyed by name, so the declaration would point at a ghost; drop the
     generator first."""
-    for _ in range(max_retries):
-        snap = tx_snapshot(table)
+    def attempt(snap):
         for name, pred in snap.get("constraints", {}).items():
-            import re as _re
-            if _re.search(rf"\b{_re.escape(col)}\b", pred):
+            if re.search(rf"\b{re.escape(col)}\b", pred):
                 raise ValueError(
                     f"{table}: column '{col}' is referenced by CHECK "
                     f"constraint '{name}' ({pred!r}) — drop the "
@@ -2265,14 +2188,9 @@ def tx_drop_column(table: str, col: str, max_retries: int = 8) -> int:
         drops = list(snap.get("drops", []))
         if col not in drops:
             drops.append(col)
-        try:
-            return _commit(table, snap["version"], list(snap["files"]),
-                           op=f"drop-column:{col}",
-                           stats=snap.get("stats"), dvs=snap.get("dvs"),
-                           drops=drops)
-        except TxConflict:
-            continue
-    raise TxConflict(f"drop-column lost {max_retries} CAS races in {table}")
+        return _metadata_commit(snap, f"drop-column:{col}", drops=drops)
+
+    return _cas(table, "drop-column", _COMMIT_RETRIES, attempt)
 
 
 # ---------------------------------------------------------------------------
@@ -2359,8 +2277,7 @@ def _current_column_type(table: str, snap: dict, col: str) -> str | None:
     return None
 
 
-def tx_widen_column(table: str, col: str, to_type: str,
-                    max_retries: int = 8) -> int:
+def tx_widen_column(table: str, col: str, to_type: str) -> int:
     """ALTER COLUMN ``col`` TYPE ``to_type`` — type WIDENING as a pure
     metadata commit (zero bytes rewritten): the manifest carries a
     ``types`` map every commit forwards (like renames/drops/
@@ -2379,8 +2296,8 @@ def tx_widen_column(table: str, col: str, to_type: str,
         raise ValueError(
             f"{table}: cannot widen to '{to_type}' — supported targets: "
             f"{sorted({t for _, t in _WIDENINGS})}")
-    for _ in range(max_retries):
-        snap = tx_snapshot(table)
+
+    def attempt(snap):
         if col in snap.get("drops", []):
             raise ValueError(f"{table}: column '{col}' is dropped")
         cur = _current_column_type(table, snap, col)
@@ -2392,16 +2309,11 @@ def tx_widen_column(table: str, col: str, to_type: str,
             raise ValueError(
                 f"{table}: '{col}' is {cur} — {cur}→{to_type} is not a "
                 f"value-preserving widening")
-        types = dict(snap.get("types", {}))
-        types[col] = to_type
-        try:
-            return _commit(table, snap["version"], list(snap["files"]),
-                           op=f"widen:{col}:{cur}->{to_type}",
-                           stats=snap.get("stats"), dvs=snap.get("dvs"),
-                           types=types)
-        except TxConflict:
-            continue
-    raise TxConflict(f"widen lost {max_retries} CAS races in {table}")
+        return _metadata_commit(
+            snap, f"widen:{col}:{cur}->{to_type}",
+            types={**snap.get("types", {}), col: to_type})
+
+    return _cas(table, "widen", _COMMIT_RETRIES, attempt)
 
 
 def tx_merge(spark: SparkSession, table: str, source: DataFrame,
@@ -2409,8 +2321,7 @@ def tx_merge(spark: SparkSession, table: str, source: DataFrame,
              when_matched_set: dict[str, str] | None = None,
              matched_condition: str | None = None,
              insert_not_matched: bool = True,
-             delete_matched: bool = False,
-             max_retries: int = 3) -> int:
+             delete_matched: bool = False) -> int:
     """FULL CONDITIONAL MERGE — the Delta statement users actually
     write, generalizing ``tx_merge_upsert`` (replace-whole-row) to the
     three-clause form::
@@ -2462,8 +2373,8 @@ def tx_merge(spark: SparkSession, table: str, source: DataFrame,
     nulo, nuhi = _stat_value(ulo), _stat_value(uhi)
     src_pref = source.select(
         *(F.col(c).alias("__s_" + c) for c in source.columns))
-    for _ in range(max_retries):
-        snap = tx_snapshot(table)
+
+    def attempt(snap):
         if snap.get("generated", {}) != gens:
             # a generator landed mid-flight: the source rows were not
             # computed/validated under it and cannot rebase
@@ -2572,17 +2483,15 @@ def tx_merge(spark: SparkSession, table: str, source: DataFrame,
                  if stat_cols else {})
         keep_dvs = {n: d for n, d in snap.get("dvs", {}).items()
                     if n in kept}
-        try:
-            return _commit(
-                table, snap["version"], kept + produced, op="merge",
-                stats=_merged_stats(snap, kept, fresh) if stats else None,
-                dvs=keep_dvs or None,
-                add_schema=_df_schema_map(
-                    merged if merged is not None else ins_part),
-                rids=new_rids, row_hwm=hwm)
-        except TxConflict:
-            continue
-    raise TxConflict(f"merge lost {max_retries} CAS races in {table}")
+        return dict(
+            files=kept + produced, op="merge",
+            stats=_merged_stats(snap, kept, fresh) if stats else None,
+            dvs=keep_dvs or None,
+            add_schema=_df_schema_map(
+                merged if merged is not None else ins_part),
+            rids=new_rids, row_hwm=hwm)
+
+    return _cas(table, "merge", _REWRITE_RETRIES, attempt)
 
 
 def tx_changes_as_of_timestamp(spark: SparkSession, table: str,
@@ -2597,8 +2506,7 @@ def tx_changes_as_of_timestamp(spark: SparkSession, table: str,
         spark, table, tx_version_as_of_timestamp(table, ts_us), v_to)
 
 
-def tx_reorg_purge(spark: SparkSession, table: str,
-                   max_retries: int = 3) -> int:
+def tx_reorg_purge(spark: SparkSession, table: str) -> int:
     """REORG TABLE ... APPLY (PURGE) — explicitly retire column-mapping
     debt: rewrite every file whose PHYSICAL schema lags the logical one
     (pre-rename names, dropped-column bytes, pre-widen narrow types),
@@ -2621,8 +2529,7 @@ def tx_reorg_purge(spark: SparkSession, table: str,
     names (the compaction precedent)."""
     import pyarrow.parquet as papq
 
-    for _ in range(max_retries):
-        snap = tx_snapshot(table)
+    def attempt(snap):
         chain = snap.get("renames", [])
         drops = set(snap.get("drops", []))
         types = snap.get("types", {})
@@ -2651,13 +2558,8 @@ def tx_reorg_purge(spark: SparkSession, table: str,
                 lagging.append(name)
         if not lagging:
             # physically clean already: clear the metadata only
-            try:
-                return _commit(table, snap["version"],
-                               list(snap["files"]), op="reorg-purge",
-                               stats=snap.get("stats"), renames=[],
-                               drops=[], types={})
-            except TxConflict:
-                continue
+            return _metadata_commit(snap, "reorg-purge", renames=[],
+                                    drops=[], types={})
         # row-tracked tables: the purge rewrite MATERIALIZES ids, the
         # same rule as compaction/OPTIMIZE (tracked read applies masks
         # on the same positions it resolves ids from)
@@ -2695,15 +2597,11 @@ def tx_reorg_purge(spark: SparkSession, table: str,
             new_rids = {n: b for n, b in snap["rids"].items() if n in clean}
             for n in produced:
                 new_rids[n] = None  # ids are materialized in the file
-        try:
-            return _commit(table, snap["version"], clean + produced,
-                           op="reorg-purge", stats=stats,
-                           dvs=keep_dvs or None, renames=[], drops=[],
-                           types={}, add_schema=_df_schema_map(src),
-                           rids=new_rids)
-        except TxConflict:
-            continue
-    raise TxConflict(f"reorg lost {max_retries} CAS races in {table}")
+        return dict(files=clean + produced, op="reorg-purge", stats=stats,
+                    dvs=keep_dvs or None, renames=[], drops=[], types={},
+                    add_schema=_df_schema_map(src), rids=new_rids)
+
+    return _cas(table, "reorg", _REWRITE_RETRIES, attempt)
 
 
 # --- Row tracking (stable row IDs across physical rewrites) -------------------
@@ -2720,16 +2618,15 @@ def _parquet_num_rows(path: str) -> int:
     return papq.read_metadata(path).num_rows
 
 
-def _tracked_append_rids(snap: dict, new_files: list[str],
-                         counts: dict) -> tuple[dict | None, int | None]:
-    """Positional id-base assignment for an append onto a TRACKED
-    table: (rids-with-new-bases, new-hwm), or (None, None) when the
-    table isn't tracked (plain appends on plain tables stay plain).
-    Call inside the CAS loop — the hwm must come from the snapshot
-    each retry so racing appends get disjoint ranges."""
-    if not snap.get("rids"):
-        return None, None
-    rids = {n: b for n, b in snap["rids"].items() if n in snap["files"]}
+def _assign_row_ids(snap: dict, new_files: list[str],
+                    counts: dict) -> tuple[dict, int]:
+    """Positional id-base assignment for an append: (rids-with-new-
+    bases, new-hwm). Entries for files no longer live are pruned, and
+    fresh bases come from the snapshot's high-water-mark in staging
+    order. Call inside the CAS loop — the hwm must come from the
+    snapshot each retry so racing appends get disjoint ranges."""
+    rids = {n: b for n, b in snap.get("rids", {}).items()
+            if n in snap["files"]}
     base = snap.get("row_hwm", 0)
     for n in new_files:
         rids[n] = base
@@ -2738,7 +2635,6 @@ def _tracked_append_rids(snap: dict, new_files: list[str],
 
 
 def tx_append_tracked(df: DataFrame, table: str, n_files: int | None = None,
-                      max_retries: int = 8,
                       stat_cols: list[str] | None = None) -> int:
     """Append with ROW TRACKING (Delta's row-tracking feature): every
     row gets a table-unique, monotonically-increasing id that survives
@@ -2763,43 +2659,11 @@ def tx_append_tracked(df: DataFrame, table: str, n_files: int | None = None,
     list-position identity for in-memory records (memory.py:63-90);
     this is that identity made durable and rewrite-stable.
     """
-    gens = tx_generated(table)
-    df = _apply_generated(df, table, gens)
-    validated = tx_constraints(table)
-    _enforce_constraints(df, table, validated)
-    new_files = _stage_dataframe(df, table, n_files)
-    counts = {n: _parquet_num_rows(os.path.join(table, n))
-              for n in new_files}
-    fresh_stats = (_collect_file_stats(table, new_files, sorted(stat_cols))
-                   if stat_cols else None)
-    for _ in range(max_retries):
-        snap = tx_snapshot(table)
-        if snap.get("generated", {}) != gens:
-            raise TxConflict(
-                f"{table}: generated-column set changed during append")
-        cs = snap.get("constraints", {})
-        if cs != validated:
-            _enforce_constraints(df, table, cs)
-            validated = cs
-        # prune entries for files no longer live, then assign fresh
-        # bases from the snapshot's high-water-mark in staging order
-        rids = {n: b for n, b in snap.get("rids", {}).items()
-                if n in snap["files"]}
-        base = snap.get("row_hwm", 0)
-        for n in new_files:
-            rids[n] = base
-            base += counts[n]
-        try:
-            return _commit(
-                table, snap["version"], snap["files"] + new_files,
-                op="append",
-                stats=(_merged_stats(snap, snap["files"], fresh_stats or {})
-                       if (snap.get("stats") or fresh_stats) else None),
-                dvs=snap.get("dvs"), add_schema=_df_schema_map(df),
-                rids=rids, row_hwm=base)
-        except TxConflict:
-            continue
-    raise TxConflict(f"tracked append lost {max_retries} CAS races in {table}")
+    return _append(
+        df, table, "append", n_files,
+        fresh_stats=(lambda names: _collect_file_stats(
+            table, names, sorted(stat_cols))) if stat_cols else None,
+        row_ids="always")
 
 
 def _read_tracked_files(spark: SparkSession, table: str, snap: dict,
@@ -2990,8 +2854,7 @@ def tx_generated(table: str, version: int | None = None) -> dict:
     return tx_snapshot(table, version).get("generated", {})
 
 
-def tx_set_generated(table: str, col: str, base: str, div: int,
-                     max_retries: int = 8) -> int:
+def tx_set_generated(table: str, col: str, base: str, div: int) -> int:
     """Declare ``col`` GENERATED ALWAYS AS (``base`` div ``div``).
     Metadata-only commit; binds every subsequent write (computed when
     absent, VALIDATED when supplied — a wrong supplied value is
@@ -3007,8 +2870,8 @@ def tx_set_generated(table: str, col: str, base: str, div: int,
         raise ValueError(
             f"{_RID} is reserved for row tracking and cannot be "
             "generated or used as a generator base")
-    for _ in range(max_retries):
-        snap = tx_snapshot(table)
+
+    def attempt(snap):
         gens = dict(snap.get("generated", {}))
         if base in gens:
             raise ValueError(
@@ -3025,13 +2888,9 @@ def tx_set_generated(table: str, col: str, base: str, div: int,
                 "generator must be declared before the column is ever "
                 "written (existing values are unvalidated)")
         gens[col] = {"base": base, "div": int(div)}
-        try:
-            return _commit(table, snap["version"], snap["files"],
-                           op="set-generated", stats=snap.get("stats"),
-                           dvs=snap.get("dvs"), generated=gens)
-        except TxConflict:
-            continue
-    raise TxConflict(f"set-generated lost {max_retries} CAS races in {table}")
+        return _metadata_commit(snap, "set-generated", generated=gens)
+
+    return _cas(table, "set-generated", _COMMIT_RETRIES, attempt)
 
 
 def _apply_generated(df: DataFrame, table: str, gens: dict) -> DataFrame:
@@ -3064,7 +2923,6 @@ def _apply_generated(df: DataFrame, table: str, gens: dict) -> DataFrame:
 
 def tx_append_tracked_txn(df: DataFrame, table: str, app: str, batch: int,
                           n_files: int | None = None,
-                          max_retries: int = 8,
                           shuffle: bool = False) -> int:
     """EXACTLY-ONCE tracked append: ``tx_append_txn``'s idempotent
     (app, batch) writer-transaction key composed with row tracking —
@@ -3076,43 +2934,5 @@ def tx_append_tracked_txn(df: DataFrame, table: str, app: str, batch: int,
     manifest). Together with ``tx_changes_by_rid`` this gives a
     streaming landing zone whose rows carry durable identity from
     their very first commit."""
-    done = tx_txn_version(table, app, batch)
-    if done is not None:
-        return done
-    gens = tx_generated(table)
-    df = _apply_generated(df, table, gens)
-    validated = tx_constraints(table)
-    _enforce_constraints(df, table, validated)
-    new_files = _stage_dataframe(df, table, n_files, shuffle=shuffle)
-    counts = {n: _parquet_num_rows(os.path.join(table, n))
-              for n in new_files}
-    for _ in range(max_retries):
-        done = tx_txn_version(table, app, batch)
-        if done is not None:
-            return done  # concurrent replay won; our files are orphans
-        snap = tx_snapshot(table)
-        if snap.get("generated", {}) != gens:
-            raise TxConflict(
-                f"{table}: generated-column set changed during append")
-        cs = snap.get("constraints", {})
-        if cs != validated:
-            _enforce_constraints(df, table, cs)
-            validated = cs
-        rids = {n: b for n, b in snap.get("rids", {}).items()
-                if n in snap["files"]}
-        base = snap.get("row_hwm", 0)
-        for n in new_files:
-            rids[n] = base
-            base += counts[n]
-        try:
-            return _commit(
-                table, snap["version"], snap["files"] + new_files,
-                op="append", txn={"app": app, "batch": batch},
-                stats=(_merged_stats(snap, snap["files"], {})
-                       if snap.get("stats") else None),
-                dvs=snap.get("dvs"), add_schema=_df_schema_map(df),
-                rids=rids, row_hwm=base)
-        except TxConflict:
-            continue
-    raise TxConflict(
-        f"tracked txn append lost {max_retries} CAS races in {table}")
+    return _append(df, table, "append", n_files, shuffle=shuffle,
+                   txn={"app": app, "batch": batch}, row_ids="always")

@@ -1,4 +1,4 @@
-"""Config-catalog scan + lenient JSON parse unit tests."""
+"""Config-catalog scan, lenient JSON parse and table-source unit tests."""
 
 from __future__ import annotations
 
@@ -197,3 +197,54 @@ def test_ts_us_ntz_inference_pinned_and_unknown_type_named(spark, tmp_path):
     df = spark.createDataFrame([("x",)], "ts string")
     with _pytest.raises(TypeError, match="unsupported events.ts type"):
         ts_us_expr(df)
+
+
+def test_plan_cache_entry_dies_with_its_session(monkeypatch, tmp_path):
+    """A cached plan references its session, so the cache must not be
+    what keeps a dropped session (and its plans) alive."""
+    import gc
+
+    from pulsar_project_spark.sources import tables
+
+    monkeypatch.setattr(tables, "_PLAN_CACHE", type(tables._PLAN_CACHE)())
+    path = str(tmp_path / "t.parquet")
+    open(path, "wb").close()
+
+    class Session:
+        pass
+
+    class Plan:
+        def __init__(self, session):
+            self.session = session
+
+    session = Session()
+    plan = tables._cached_plan(session, path, "table", lambda: Plan(session))
+    assert tables._cached_plan(session, path, "table", lambda: None) is plan
+    assert len(tables._PLAN_CACHE) == 1
+    del session, plan
+    gc.collect()
+    assert len(tables._PLAN_CACHE) == 0
+
+
+def test_register_views_skips_a_table_that_vanishes_mid_listing(
+        spark, monkeypatch):
+    """A table file deleted between the existence check and the stat is
+    skipped like an absent table, not raised."""
+    from pulsar_project_spark.sources import tables
+    from tests.conftest import SF_SMOKE
+
+    gone = tables.table_path(SF_SMOKE, "nation")
+    real_stat = os.stat
+    calls = []
+
+    def stat(path, *args, **kwargs):
+        if path == gone:
+            calls.append(path)
+            if len(calls) > 1:  # the existence check saw it; then it went
+                raise FileNotFoundError(path)
+        return real_stat(path, *args, **kwargs)
+
+    monkeypatch.setattr(os, "stat", stat)
+    dfs = tables.register_views(spark, SF_SMOKE)
+    assert "nation" not in dfs
+    assert {"region", "orders"} <= set(dfs)

@@ -86,6 +86,45 @@ def test_cas_race_exactly_one_winner(spark, table):
     assert _census(spark, table) == (30, sum(3 * i for i in range(30)))
 
 
+def test_stage_refuses_duplicated_task_output(spark, table, monkeypatch):
+    """A non-atomic task commit (committer v2, MAPREDUCE-7282) can leave
+    two part files for one task in the staging directory; staging must
+    refuse them rather than publish the task's rows twice."""
+    import shutil
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    write = DataFrameWriter.parquet
+
+    def write_then_duplicate_a_task(self, path, *args, **kwargs):
+        write(self, path, *args, **kwargs)
+        part = sorted(f for f in os.listdir(path) if f.startswith("part-"))[0]
+        index = part[:len("part-00000-")]
+        shutil.copy(os.path.join(path, part),
+                    os.path.join(path, index + "retried-" + part[len(index):]))
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", write_then_duplicate_a_task)
+    with pytest.raises(RuntimeError, match="duplicated task output"):
+        _stage_dataframe(_mk(spark, 0, 10), table, n_files=2)
+    assert not [f for f in os.listdir(table) if f.endswith(".parquet")]
+
+
+def test_clustered_append_keeps_deletion_vectors(spark, table):
+    """Every append carries the snapshot's deletion vectors forward; a
+    clustered append once dropped them and resurrected deleted rows."""
+    from pulsar_project_spark.sources.txlog import (
+        tx_append_clustered,
+        tx_delete_range_dv,
+    )
+
+    tx_append(_mk(spark, 0, 100), table, n_files=2)
+    tx_delete_range_dv(spark, table, "id", 10, 19)
+    tx_append_clustered(_mk(spark, 100, 110), table, ["id"], n_files=2)
+    got = sorted(r["id"] for r in tx_read(spark, table).collect())
+    assert got == [i for i in range(110) if not 10 <= i <= 19]
+    assert tx_snapshot(table).get("dvs")
+
+
 def test_compaction_preserves_data_and_merges_files(spark, table):
     for lo in range(0, 400, 100):
         tx_append(_mk(spark, lo, lo + 100), table, n_files=5)
@@ -879,7 +918,7 @@ def test_bloom_never_false_negative_exhaustive(spark, table):
     assert out.count() == 300  # every stored needle found
 
 
-def test_mixed_ops_concurrent_writers_serialize(spark, table):
+def test_mixed_ops_concurrent_writers_serialize(spark, table, monkeypatch):
     """Appends + a COW delete + a compaction racing on one table: every
     writer must eventually commit through CAS-retry (appends rebase,
     delete/compaction REPLAN from the fresh snapshot), and the final
@@ -890,8 +929,12 @@ def test_mixed_ops_concurrent_writers_serialize(spark, table):
     just appends."""
     import threading
 
+    import pulsar_project_spark.sources.txlog as tl
     from pulsar_project_spark.sources.txlog import tx_delete_range
 
+    # six racing writers: give every one of them a 64-race budget
+    monkeypatch.setattr(tl, "_COMMIT_RETRIES", 64)
+    monkeypatch.setattr(tl, "_REWRITE_RETRIES", 64)
     tx_append(_mk(spark, 0, 1000), table, n_files=4)
     errs = []
 
@@ -905,15 +948,13 @@ def test_mixed_ops_concurrent_writers_serialize(spark, table):
         threading.Thread(target=_run, args=(
             lambda lo=i: tx_append(
                 _mk(spark, 10_000 + lo * 100, 10_000 + lo * 100 + 100),
-                table, n_files=1, max_retries=64),))
+                table, n_files=1),))
         for i in range(4)
     ]
     deleter = threading.Thread(target=_run, args=(
-        lambda: tx_delete_range(spark, table, "id", 100, 199,
-                                max_retries=64),))
+        lambda: tx_delete_range(spark, table, "id", 100, 199),))
     compactor = threading.Thread(target=_run, args=(
-        lambda: tx_compact(spark, table, target_bytes=1 << 22,
-                           max_retries=64),))
+        lambda: tx_compact(spark, table, target_bytes=1 << 22),))
     threads = appenders + [deleter, compactor]
     for t in threads:
         t.start()
@@ -1263,8 +1304,8 @@ def test_constraint_added_mid_write_binds_via_retry(spark, table,
     orig = tl._stage_dataframe
     fired = {"done": False}
 
-    def staged(df, tbl, n_files=None):
-        out = orig(df, tbl, n_files)
+    def staged(df, tbl, n_files=None, **kwargs):
+        out = orig(df, tbl, n_files, **kwargs)
         if not fired["done"]:
             fired["done"] = True
             tl.tx_set_constraint(spark, tbl, "v_pos", "v > 0")
