@@ -46,6 +46,20 @@ def _rt_path(kind: str) -> str:
     )
 
 
+def _fresh_tx_table(kind: str) -> str:
+    """A freshly initialized, empty tx table at the scratch path of
+    ``kind`` (``_rt_path``), replacing a previous call's table there."""
+    import shutil
+
+    from pulsar_project_spark.sources.txlog import tx_init
+
+    path = _rt_path(kind)
+    if os.path.exists(path):
+        shutil.rmtree(path)
+    tx_init(path)
+    return path
+
+
 def _events_int_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared integer/string-only roundtrip record (see module
     docstring): floats leave the plan as exact cents BEFORE any write."""
@@ -392,14 +406,9 @@ def _build_tx_events_table(spark: SparkSession, sf_dir: str) -> str:
     as 3 residue-class appends (pmod(event_id, 3) — signed-safe, same
     rule the oracles replay) of 4 files each: 12 small files, the
     classic streaming-landing-zone state compaction exists to fix."""
-    import shutil
+    from pulsar_project_spark.sources.txlog import tx_append
 
-    from pulsar_project_spark.sources.txlog import tx_append, tx_init
-
-    path = _rt_path("txlog_events")
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    tx_init(path)
+    path = _fresh_tx_table("txlog_events")
     ev = _events_int_projection(spark, sf_dir)
     for r in range(_TX_SPLITS):
         tx_append(
@@ -412,21 +421,9 @@ def _build_tx_events_table(spark: SparkSession, sf_dir: str) -> str:
     return path
 
 
-_TX_EMPTY_SCHEMA = StructType([
-    StructField("event_type", StringType()),
-    StructField("n_events", LongType()),
-    StructField("total_cents", LongType()),
-    StructField("last_us", LongType()),
-])
-
-
 def _tx_census(spark: SparkSession, path: str, version: int | None) -> DataFrame:
-    from pulsar_project_spark.sources.txlog import tx_read, tx_snapshot
+    from pulsar_project_spark.sources.txlog import tx_read
 
-    if not tx_snapshot(path, version)["files"]:
-        # a zero-row source commits file-less manifests; the census of
-        # nothing is an empty relation, not a read error
-        return spark.createDataFrame([], _TX_EMPTY_SCHEMA)
     back = tx_read(spark, path, version)
     return back.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
@@ -512,19 +509,13 @@ def q_tx_optimize_zorder_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     standing layout-maintenance job of a 100 TB lakehouse table, here
     composed with the commit protocol instead of an unsafe in-place
     overwrite."""
-    import shutil
-
     from pulsar_project_spark.sources.txlog import (
         tx_append,
-        tx_init,
         tx_optimize_zorder,
-        tx_snapshot,
+        tx_read,
     )
 
-    path = _rt_path("txlog_zorder")
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    tx_init(path)
+    path = _fresh_tx_table("txlog_zorder")
     ev = load_events(spark, sf_dir).select(
         "event_id",
         "user_id",
@@ -540,15 +531,6 @@ def q_tx_optimize_zorder_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     tx_append(ev.filter(F.col("event_id").isNull()).drop("event_id"),
               path, n_files=1)
     tx_optimize_zorder(spark, path, "user_id", "day", n_files=8)
-    from pulsar_project_spark.sources.txlog import tx_read
-    if not tx_snapshot(path, None)["files"]:
-        from pyspark.sql.types import LongType, StructField, StructType
-        return spark.createDataFrame([], StructType([
-            StructField("user_bucket", LongType()),
-            StructField("n_events", LongType()),
-            StructField("total_cents", LongType()),
-            StructField("max_day", LongType()),
-        ]))
     back = tx_read(spark, path)
     return back.groupBy(
         F.pmod(F.col("user_id"), F.lit(97)).alias("user_bucket")
@@ -583,26 +565,13 @@ def q_tx_pruned_read_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered census over the original parquet. The actual file-skip
     count is pinned in tests/test_txlog.py (layout-dependent, so it
     belongs to a test, not a hash)."""
-    import shutil
-
     from pulsar_project_spark.sources.txlog import (
         tx_append,
-        tx_init,
         tx_optimize_zorder,
         tx_read_pruned,
-        tx_snapshot,
     )
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-    empty_schema = StructType([
-        StructField("event_type", StringType()),
-        StructField("n_events", LongType()),
-        StructField("total_cents", LongType()),
-    ])
-    path = _rt_path("txlog_prune")
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    tx_init(path)
+    path = _fresh_tx_table("txlog_prune")
     ev = load_events(spark, sf_dir).select(
         "user_id",
         F.expr("ts_us div 86400000000").alias("day"),
@@ -611,15 +580,7 @@ def q_tx_pruned_read_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tx_append(ev, path, n_files=4)
     tx_optimize_zorder(spark, path, "user_id", "day", n_files=8)
-    if not tx_snapshot(path)["files"]:
-        return spark.createDataFrame([], empty_schema)
-    try:
-        pruned, _n_read, _n_total = tx_read_pruned(
-            spark, path, "user_id", 0, 400)
-    except ValueError:
-        # bounds PROVED no file intersects the range: the census of
-        # nothing (a valid outcome for a degenerate corpus)
-        return spark.createDataFrame([], empty_schema)
+    pruned, _n_read, _n_total = tx_read_pruned(spark, path, "user_id", 0, 400)
     return pruned.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
         F.sum("value_cents").alias("total_cents"),
@@ -649,27 +610,14 @@ def q_tx_delete_range_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly that survivor set, so an over- or under-delete breaks the
     hash. The only-overlapping-files-touched property is pinned in
     tests/test_txlog.py (layout-dependent, so it belongs to a test)."""
-    import shutil
-
     from pulsar_project_spark.sources.txlog import (
         tx_append,
         tx_delete_range,
-        tx_init,
         tx_optimize_zorder,
         tx_read,
-        tx_snapshot,
     )
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-    empty_schema = StructType([
-        StructField("event_type", StringType()),
-        StructField("n_events", LongType()),
-        StructField("total_cents", LongType()),
-    ])
-    path = _rt_path("txlog_delete")
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    tx_init(path)
+    path = _fresh_tx_table("txlog_delete")
     ev = load_events(spark, sf_dir).select(
         "user_id",
         F.expr("ts_us div 86400000000").alias("day"),
@@ -678,11 +626,7 @@ def q_tx_delete_range_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tx_append(ev, path, n_files=4)
     tx_optimize_zorder(spark, path, "user_id", "day", n_files=8)
-    if not tx_snapshot(path)["files"]:
-        return spark.createDataFrame([], empty_schema)
     tx_delete_range(spark, path, "user_id", 100, 300)
-    if not tx_snapshot(path)["files"]:
-        return spark.createDataFrame([], empty_schema)
     return tx_read(spark, path).groupBy("event_type").agg(
         F.count("*").alias("n_events"),
         F.sum("value_cents").alias("total_cents"),
@@ -720,30 +664,14 @@ def q_tx_merge_upsert_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     range — is replayed by the oracle from the raw events, so a lost
     replacement, doubled insert, or clobbered bystander row breaks the
     hash."""
-    import shutil
-
     from pulsar_project_spark.sources.txlog import (
         tx_append,
-        tx_init,
         tx_merge_upsert,
         tx_optimize_zorder,
         tx_read,
-        tx_snapshot,
     )
-    from pyspark.sql.types import LongType, StructField, StructType
 
-    empty_schema = StructType([
-        StructField("n_users", LongType()),
-        StructField("total_cents", LongType()),
-    ])
-
-    def _empty():
-        return spark.createDataFrame([(0, 0)], empty_schema)
-
-    path = _rt_path("txlog_merge")
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    tx_init(path)
+    path = _fresh_tx_table("txlog_merge")
     per_user = (
         load_events(spark, sf_dir)
         .filter(F.col("user_id").isNotNull())
@@ -753,8 +681,6 @@ def q_tx_merge_upsert_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tx_append(per_user, path, n_files=4)
     tx_optimize_zorder(spark, path, "user_id", "user_id", n_files=8)
-    if not tx_snapshot(path)["files"]:
-        return _empty()
     in_range = tx_read(spark, path).filter(
         F.col("user_id").between(100, 300))
     tx_merge_upsert(
@@ -905,13 +831,7 @@ def q_tx_catalog_atomic_move_census(spark: SparkSession,
         catalog_read,
     )
     from pulsar_project_spark.sources.txlog import tx_append, tx_init
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-    empty_schema = StructType([
-        StructField("tier", StringType()),
-        StructField("n_events", LongType()),
-        StructField("total_cents", LongType()),
-    ])
     base = _rt_path("txcatalog_tiering")
     if os.path.exists(base):
         shutil.rmtree(base)
@@ -929,16 +849,10 @@ def q_tx_catalog_atomic_move_census(spark: SparkSession,
                  F.col("ts_us") < F.lit(_TIER_CUT_US))
     catalog_move(spark, cat, "cold", "hot",
                  F.col("ts_us") < F.lit(_RECALL_CUT_US))
-    parts = []
-    for tier in ("hot", "cold"):
-        df, _n = catalog_read(spark, cat, tier)
-        if df is not None:
-            parts.append(df.withColumn("tier", F.lit(tier)))
-    if not parts:
-        return spark.createDataFrame([], empty_schema)
-    un = parts[0]
-    for p in parts[1:]:
-        un = un.unionByName(p)
+    hot_df, _ = catalog_read(spark, cat, "hot")
+    cold_df, _ = catalog_read(spark, cat, "cold")
+    un = hot_df.withColumn("tier", F.lit("hot")).unionByName(
+        cold_df.withColumn("tier", F.lit("cold")))
     return un.groupBy("tier").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum("value_cents").alias("total_cents"),
@@ -1009,19 +923,12 @@ def q_tx_partition_evolution_census(spark: SparkSession,
     Scale shape: re-speccing a 100 TB table costs zero data movement —
     old files stay readable and prunable; only new files get the new
     clustering. The read plans from manifest metadata (no file opens)."""
-    import shutil
-
     from pulsar_project_spark.sources.txlog import (
         tx_append_clustered,
-        tx_init,
         tx_read_pruned,
-        tx_snapshot,
     )
 
-    path = _rt_path("txlog_evolution")
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    tx_init(path)
+    path = _fresh_tx_table("txlog_evolution")
     ev = _events_int_projection(spark, sf_dir).withColumn(
         "day", F.expr("ts_us div 86400000000"))
     gen1 = ev.filter(F.pmod(F.col("event_id"), F.lit(2)) == 0)
@@ -1030,17 +937,8 @@ def q_tx_partition_evolution_census(spark: SparkSession,
         | F.col("event_id").isNull())
     tx_append_clustered(gen1, path, ["day"], n_files=4)
     tx_append_clustered(gen2, path, ["event_type", "day"], n_files=4)
-    if not tx_snapshot(path)["files"]:
-        return spark.createDataFrame([], _TX_EMPTY_SCHEMA).select(
-            "event_type", "n_events", "total_cents")
-    try:
-        pruned, _n_read, _n_total = tx_read_pruned(
-            spark, path, "day", _EVOLVE_DAY_LO, _EVOLVE_DAY_HI)
-    except ValueError:
-        # bounds PROVED no file intersects the week — a valid outcome
-        # for a corpus living entirely outside it
-        return spark.createDataFrame([], _TX_EMPTY_SCHEMA).select(
-            "event_type", "n_events", "total_cents")
+    pruned, _n_read, _n_total = tx_read_pruned(
+        spark, path, "day", _EVOLVE_DAY_LO, _EVOLVE_DAY_HI)
     return pruned.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum("value_cents").alias("total_cents"),
@@ -1098,26 +996,13 @@ def q_tx_delete_dv_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows) metadata instead of rewriting every file whose bounds
     overlap — the manifest bounds still pick which files even need
     scanning for matches (clustered append records them here)."""
-    import shutil
-
     from pulsar_project_spark.sources.txlog import (
         tx_append_clustered,
         tx_delete_range_dv,
-        tx_init,
         tx_read,
-        tx_snapshot,
     )
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-    empty_schema = StructType([
-        StructField("event_type", StringType()),
-        StructField("n_events", LongType()),
-        StructField("total_cents", LongType()),
-    ])
-    path = _rt_path("txlog_delete_dv")
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    tx_init(path)
+    path = _fresh_tx_table("txlog_delete_dv")
     ev = load_events(spark, sf_dir).select(
         "user_id",
         F.expr("ts_us div 86400000000").alias("day"),
@@ -1125,8 +1010,6 @@ def q_tx_delete_dv_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("value") * 100).cast("bigint").alias("value_cents"),
     )
     tx_append_clustered(ev, path, ["user_id"], n_files=4)
-    if not tx_snapshot(path)["files"]:
-        return spark.createDataFrame([], empty_schema)
     tx_delete_range_dv(spark, path, "user_id", 100, 300)
     return tx_read(spark, path).groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -1167,23 +1050,17 @@ def _build_cdf_table(spark: SparkSession, sf_dir: str, name: str) -> str:
     deletion-vector delete, and a copy-on-write delete. Cached per
     (process, sf_dir) under the FIRST caller's name — consumers only
     read the finished manifest chain."""
-    import shutil
-
     from pulsar_project_spark.sources.txlog import (
         tx_append,
         tx_compact,
         tx_delete_range,
         tx_delete_range_dv,
-        tx_init,
     )
 
     cached = _CDF_BUILD_CACHE.get(sf_dir)
     if cached is not None and os.path.isdir(cached):
         return cached
-    path = _rt_path(name)
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    tx_init(path)
+    path = _fresh_tx_table(name)
     ev = _events_int_projection(spark, sf_dir)
     res = F.pmod(F.col("event_id"), F.lit(2))
     tx_append(ev.filter(res == 0), path, n_files=4)                 # v1
@@ -1195,12 +1072,6 @@ def _build_cdf_table(spark: SparkSession, sf_dir: str, name: str) -> str:
     _CDF_BUILD_CACHE.clear()
     _CDF_BUILD_CACHE[sf_dir] = path
     return path
-
-
-_TX_CDF_EMPTY = [
-    ("change_type", "string"), ("event_type", "string"),
-    ("n_rows", "long"), ("total_cents", "long"),
-]
 
 
 @declare("tx_change_feed_census", oracle=_TX_CDF_SQL)
@@ -1226,14 +1097,8 @@ def q_tx_change_feed_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows, which is exactly what the streaming source twin does."""
     from pulsar_project_spark.sources.txlog import tx_table_changes
 
-    path = _build_cdf_table(spark, sf_dir, "txlog_cdf")
-    try:
-        feed = tx_table_changes(spark, path, 0)
-    except ValueError:
-        # a degenerate corpus may commit no data-changing files at all
-        from pyspark.sql.types import StructType
-        return spark.createDataFrame(
-            [], ", ".join(f"{n} {t}" for n, t in _TX_CDF_EMPTY))
+    feed = tx_table_changes(
+        spark, _build_cdf_table(spark, sf_dir, "txlog_cdf"), 0)
     return (
         feed.groupBy(
             F.col("_change_type").alias("change_type"), "event_type")
@@ -1276,16 +1141,8 @@ def q_tx_cdf_incremental_agg_census(spark: SparkSession,
     delta, which is the entire point of a change data feed."""
     from pulsar_project_spark.sources.txlog import tx_table_changes
 
-    path = _build_cdf_table(spark, sf_dir, "txlog_cdf_fold")
-    try:
-        feed = tx_table_changes(spark, path, 0)
-    except ValueError:
-        from pyspark.sql.types import LongType, StringType, StructField, StructType
-        return spark.createDataFrame([], StructType([
-            StructField("event_type", StringType()),
-            StructField("n_events", LongType()),
-            StructField("total_cents", LongType()),
-        ]))
+    feed = tx_table_changes(
+        spark, _build_cdf_table(spark, sf_dir, "txlog_cdf_fold"), 0)
     w = F.when(F.col("_change_type") == "insert", F.col("_n")) \
          .otherwise(-F.col("_n"))
     return (
@@ -1369,26 +1226,12 @@ def q_tx_schema_evolution_census(spark: SparkSession,
     Scale shape: widening a 100 TB table is one metadata decision; the
     merged read costs the same scan it always did (parquet mergeSchema
     resolves footers, not data)."""
-    import shutil
-
     from pulsar_project_spark.sources.txlog import (
         tx_append,
-        tx_init,
         tx_read,
-        tx_snapshot,
     )
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-    empty_schema = StructType([
-        StructField("event_type", StringType()),
-        StructField("n_events", LongType()),
-        StructField("total_cents", LongType()),
-        StructField("n_with_day", LongType()),
-    ])
-    path = _rt_path("txlog_evolve_schema")
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    tx_init(path)
+    path = _fresh_tx_table("txlog_evolve_schema")
     ev = load_events(spark, sf_dir)
     cents = F.round(F.col("value") * 100).cast("bigint").alias("value_cents")
     res = F.pmod(F.col("event_id"), F.lit(2))
@@ -1398,8 +1241,6 @@ def q_tx_schema_evolution_census(spark: SparkSession,
         F.expr("ts_us div 86400000000").alias("day"))
     tx_append(gen1, path, n_files=2)
     tx_append(gen2, path, n_files=2)
-    if not tx_snapshot(path)["files"]:
-        return spark.createDataFrame([], empty_schema)
     back = tx_read(spark, path, merge_schema=True)
     if "day" not in back.columns:
         # a degenerate corpus may write only generation-1 files
@@ -1438,26 +1279,14 @@ def q_tx_update_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows missed), or a dropped/duplicated carry breaks the hash.
     Only-overlapping-files-rewritten is pinned in tests/test_txlog.py
     (layout-dependent, so it belongs to a test)."""
-    import shutil
-
     from pulsar_project_spark.sources.txlog import (
         tx_append,
-        tx_init,
         tx_optimize_zorder,
         tx_read,
-        tx_snapshot,
         tx_update,
     )
 
-    empty_schema = StructType([
-        StructField("event_type", StringType()),
-        StructField("n_events", LongType()),
-        StructField("total_cents", LongType()),
-    ])
-    path = _rt_path("txlog_update")
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    tx_init(path)
+    path = _fresh_tx_table("txlog_update")
     ev = load_events(spark, sf_dir).select(
         "user_id",
         F.expr("ts_us div 86400000000").alias("day"),
@@ -1466,8 +1295,6 @@ def q_tx_update_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tx_append(ev, path, n_files=4)
     tx_optimize_zorder(spark, path, "user_id", "day", n_files=8)
-    if not tx_snapshot(path)["files"]:
-        return spark.createDataFrame([], empty_schema)
     tx_update(spark, path, "user_id", 100, 300,
               {"value_cents": "value_cents * 3 + 7"})
     return tx_read(spark, path).groupBy("event_type").agg(
@@ -1536,25 +1363,14 @@ def q_tx_typed_change_feed_census(spark: SparkSession,
     Scale shape: the labeling is one window over (commit, key) on the
     already-small feed (touched rows, not the table) — the typed view
     costs what the weighted view costs at any table size."""
-    import shutil
-
     from pulsar_project_spark.sources.txlog import (
         tx_append_clustered,
         tx_delete_range_dv,
-        tx_init,
         tx_merge_upsert,
         tx_typed_changes,
     )
 
-    empty_schema = StructType([
-        StructField("change_type", StringType()),
-        StructField("n_rows", LongType()),
-        StructField("total_cents", LongType()),
-    ])
-    path = _rt_path("txlog_typed_cdf")
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    tx_init(path)
+    path = _fresh_tx_table("txlog_typed_cdf")
     per_user = (
         load_events(spark, sf_dir)
         .filter(F.col("user_id").isNotNull())
@@ -1579,11 +1395,7 @@ def q_tx_typed_change_feed_census(spark: SparkSession,
                         "cents"),
         "user_id")
     tx_delete_range_dv(spark, path, "user_id", 150, 250)             # v4
-    try:
-        feed = tx_typed_changes(spark, path, "user_id", 0)
-    except ValueError:
-        # a degenerate corpus may commit no data-changing files at all
-        return spark.createDataFrame([], empty_schema)
+    feed = tx_typed_changes(spark, path, "user_id", 0)
     return (
         feed.groupBy(F.col("_change_type").alias("change_type"))
         .agg(
@@ -1624,23 +1436,12 @@ def q_tx_bloom_point_lookup_census(spark: SparkSession,
     Scale shape: planning is driver arithmetic on manifest metadata —
     zero storage I/O for skipped files; at 100 TB a needle query costs
     the handful of files that might contain it, not a table scan."""
-    import shutil
-
     from pulsar_project_spark.sources.txlog import (
         tx_append_bloomed,
-        tx_init,
         tx_read_bloom_point,
-        tx_snapshot,
     )
 
-    empty_schema = StructType([
-        StructField("user_id", LongType()),
-        StructField("cents", LongType()),
-    ])
-    path = _rt_path("txlog_bloom")
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    tx_init(path)
+    path = _fresh_tx_table("txlog_bloom")
     per_user = (
         load_events(spark, sf_dir)
         .filter(F.col("user_id").isNotNull())
@@ -1651,15 +1452,8 @@ def q_tx_bloom_point_lookup_census(spark: SparkSession,
     # hash-scatter: every file spans the full id range on purpose
     tx_append_bloomed(per_user.repartition(8, "user_id"), path,
                       "user_id", n_files=None)
-    if not tx_snapshot(path)["files"]:
-        return spark.createDataFrame([], empty_schema)
-    try:
-        df, _n_read, _n_total = tx_read_bloom_point(
-            spark, path, "user_id", [5, 105, 205, 305, 405])
-    except ValueError:
-        # the blooms PROVED no file holds any needle (valid on a
-        # degenerate corpus missing all five users)
-        return spark.createDataFrame([], empty_schema)
+    df, _n_read, _n_total = tx_read_bloom_point(
+        spark, path, "user_id", [5, 105, 205, 305, 405])
     return df.select("user_id", "cents")
 
 
@@ -1692,26 +1486,13 @@ def q_tx_rename_column_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     the read-side cost is a coalesce projection — zero data movement,
     with compaction retiring the mapping debt over time exactly like
     deletion-vector debt."""
-    import shutil
-
     from pulsar_project_spark.sources.txlog import (
         tx_append,
-        tx_init,
         tx_read,
         tx_rename_column,
-        tx_snapshot,
     )
 
-    empty_schema = StructType([
-        StructField("event_type", StringType()),
-        StructField("n_events", LongType()),
-        StructField("cents", LongType()),
-        StructField("n_gen1", LongType()),
-    ])
-    path = _rt_path("txlog_rename")
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    tx_init(path)
+    path = _fresh_tx_table("txlog_rename")
     ev = load_events(spark, sf_dir)
     cents = F.round(F.col("value") * 100).cast("bigint")
     res = F.pmod(F.col("event_id"), F.lit(2))
@@ -1724,8 +1505,6 @@ def q_tx_rename_column_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     tx_append(gen1, path, n_files=2)
     tx_rename_column(path, "value_cents", "cents")
     tx_append(gen2, path, n_files=2)
-    if not tx_snapshot(path)["files"]:
-        return spark.createDataFrame([], empty_schema)
     back = tx_read(spark, path)
     if "cents" not in back.columns:
         back = back.withColumn("cents", F.lit(None).cast("bigint"))
@@ -1760,25 +1539,13 @@ def q_tx_drop_column_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     Lazy reclamation (DML/compaction rewrites retire the bytes),
     pre-drop time travel, drop-of-renamed, and the
     constraint-referenced refusal are pinned in tests/test_txlog.py."""
-    import shutil
-
     from pulsar_project_spark.sources.txlog import (
         tx_append,
         tx_drop_column,
-        tx_init,
         tx_read,
-        tx_snapshot,
     )
 
-    empty_schema = StructType([
-        StructField("event_type", StringType()),
-        StructField("n_events", LongType()),
-        StructField("total_cents", LongType()),
-    ])
-    path = _rt_path("txlog_dropcol")
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    tx_init(path)
+    path = _fresh_tx_table("txlog_dropcol")
     ev = load_events(spark, sf_dir)
     cents = F.round(F.col("value") * 100).cast("bigint")
     res = F.pmod(F.col("event_id"), F.lit(2))
@@ -1790,8 +1557,6 @@ def q_tx_drop_column_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     tx_append(gen1, path, n_files=2)
     tx_drop_column(path, "scratch_day")
     tx_append(gen2, path, n_files=2)
-    if not tx_snapshot(path)["files"]:
-        return spark.createDataFrame([], empty_schema)
     back = tx_read(spark, path)
     if "scratch_day" in back.columns:
         raise AssertionError("dropped column resurfaced in the logical read")
@@ -1830,11 +1595,8 @@ def q_tx_pruned_read_renamed_census(spark: SparkSession,
     generations breaks the gate; the actual skip COUNT on both
     generations is pinned in tests/test_txlog.py (layout-dependent, so
     it belongs to a test, not a hash)."""
-    import shutil
-
     from pulsar_project_spark.sources.txlog import (
         tx_append_clustered,
-        tx_init,
         tx_read_pruned,
         tx_rename_column,
         tx_snapshot,
@@ -1845,10 +1607,7 @@ def q_tx_pruned_read_renamed_census(spark: SparkSession,
         StructField("n_events", LongType()),
         StructField("total_cents", LongType()),
     ])
-    path = _rt_path("txlog_prune_renamed")
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    tx_init(path)
+    path = _fresh_tx_table("txlog_prune_renamed")
     ev = load_events(spark, sf_dir)
     cents = F.round(F.col("value") * 100).cast("bigint")
     res = F.pmod(F.col("event_id"), F.lit(2))
@@ -1864,13 +1623,11 @@ def q_tx_pruned_read_renamed_census(spark: SparkSession,
     if not gen2.isEmpty():
         tx_append_clustered(gen2, path, ["user_key"], n_files=4)
     if not tx_snapshot(path)["files"]:
+        # both generations empty: nothing was appended, so the table
+        # has no schema to type an empty read with
         return spark.createDataFrame([], empty_schema)
-    try:
-        pruned, _n_read, _n_total = tx_read_pruned(
-            spark, path, "user_key", 0, 400)
-    except ValueError:
-        # bounds PROVED no file intersects the range (degenerate corpus)
-        return spark.createDataFrame([], empty_schema)
+    pruned, _n_read, _n_total = tx_read_pruned(
+        spark, path, "user_key", 0, 400)
     return pruned.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum("value_cents").alias("total_cents"),
@@ -1908,11 +1665,8 @@ def q_tx_widen_column_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-widen time travel (each snapshot under its own type), lossy
     and narrowing rejections, and idempotence are pinned in
     tests/test_txlog.py."""
-    import shutil
-
     from pulsar_project_spark.sources.txlog import (
         tx_append,
-        tx_init,
         tx_read,
         tx_snapshot,
         tx_widen_column,
@@ -1924,10 +1678,7 @@ def q_tx_widen_column_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("total_cents", LongType()),
         StructField("max_cents", LongType()),
     ])
-    path = _rt_path("txlog_widen")
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    tx_init(path)
+    path = _fresh_tx_table("txlog_widen")
     ev = load_events(spark, sf_dir)
     res = F.pmod(F.col("event_id"), F.lit(2))
     gen1 = ev.filter(res == 0).select(
@@ -1942,6 +1693,8 @@ def q_tx_widen_column_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not gen2.isEmpty():
         tx_append(gen2, path, n_files=2)
     if not tx_snapshot(path)["files"]:
+        # both generations empty: nothing was appended, so the table
+        # has no schema to type an empty read with
         return spark.createDataFrame([], empty_schema)
     back = tx_read(spark, path)
     if gen1.isEmpty():
@@ -2016,11 +1769,8 @@ def q_tx_merge_conditional_census(spark: SparkSession,
     (rename-chain-resolved bounds); NOT MATCHED anti-joins only the
     affected files' keys (kept files cannot match, by the same bounds
     argument) — a targeted merge costs the overlap, never the table."""
-    import shutil
-
     from pulsar_project_spark.sources.txlog import (
         tx_append_clustered,
-        tx_init,
         tx_merge,
         tx_read,
         tx_snapshot,
@@ -2032,10 +1782,7 @@ def q_tx_merge_conditional_census(spark: SparkSession,
         StructField("total_events", LongType()),
         StructField("total_cents", LongType()),
     ])
-    path = _rt_path("txlog_merge_cond")
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    tx_init(path)
+    path = _fresh_tx_table("txlog_merge_cond")
     ev = load_events(spark, sf_dir).filter(
         F.col("user_id").isNotNull() & F.col("event_id").isNotNull())
     cents = F.round(F.col("value") * 100).cast("bigint")
@@ -2048,15 +1795,16 @@ def q_tx_merge_conditional_census(spark: SparkSession,
                 F.sum(cents).cast("bigint").alias("cents")))
     if not tgt.isEmpty():
         tx_append_clustered(tgt, path, ["user_id"], n_files=4)
-    if src.isEmpty() and not tx_snapshot(path)["files"]:
-        return spark.createDataFrame([], empty_schema)
-    if not src.isEmpty():
+    if src.isEmpty():
+        if not tx_snapshot(path)["files"]:
+            # target and source both empty: nothing was appended, so
+            # the table has no schema to type an empty read with
+            return spark.createDataFrame([], empty_schema)
+    else:
         tx_merge(spark, path, src, "user_id",
                  when_matched_set={"cnt": "cnt + __s_cnt",
                                    "cents": "cents + __s_cents"},
                  matched_condition="__s_cnt % 2 = 1")
-    if not tx_snapshot(path)["files"]:
-        return spark.createDataFrame([], empty_schema)
     back = tx_read(spark, path)
     return back.groupBy(
         F.pmod(F.col("user_id"), F.lit(23)).alias("bucket")
@@ -2093,12 +1841,9 @@ def q_tx_reorg_purge_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapping metadata survives. Physical-schema assertions, DV purge,
     carry-by-name for clean files, and pre-reorg time travel are pinned
     in tests/test_txlog.py."""
-    import shutil
-
     from pulsar_project_spark.sources.txlog import (
         tx_append,
         tx_drop_column,
-        tx_init,
         tx_read,
         tx_rename_column,
         tx_reorg_purge,
@@ -2111,10 +1856,7 @@ def q_tx_reorg_purge_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("n_events", LongType()),
         StructField("total_cents", LongType()),
     ])
-    path = _rt_path("txlog_reorg")
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    tx_init(path)
+    path = _fresh_tx_table("txlog_reorg")
     ev = load_events(spark, sf_dir)
     res = F.pmod(F.col("event_id"), F.lit(2))
     gen1 = ev.filter(res == 0).select(
@@ -2136,6 +1878,8 @@ def q_tx_reorg_purge_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     if snap.get("renames") or snap.get("drops") or snap.get("types"):
         raise AssertionError("reorg left mapping metadata behind")
     if not snap["files"]:
+        # both generations empty: nothing was appended, so the table
+        # has no schema to type an empty read with
         return spark.createDataFrame([], empty_schema)
     back = tx_read(spark, path)
     if "scratch_day" in back.columns:
@@ -2204,29 +1948,15 @@ def q_tx_row_tracking_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside the CAS loop). Reference scope: the reference's in-memory
     records keep list-position identity (memory.py:63-90); this makes
     that identity durable and rewrite-stable."""
-    import shutil
-
     from pulsar_project_spark.sources.tables import load_table
     from pulsar_project_spark.sources.txlog import (
         tx_append_tracked,
         tx_compact,
         tx_delete_range_dv,
-        tx_init,
         tx_read_tracked,
-        tx_snapshot,
     )
 
-    empty_schema = StructType([
-        StructField("bucket", LongType()),
-        StructField("n_rows", LongType()),
-        StructField("sum_rid", LongType()),
-        StructField("min_rid", LongType()),
-        StructField("max_rid", LongType()),
-    ])
-    path = _rt_path("txlog_row_tracking")
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    tx_init(path)
+    path = _fresh_tx_table("txlog_row_tracking")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey")
     for r in (0, 1, 2):
@@ -2234,8 +1964,6 @@ def q_tx_row_tracking_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.pmod(F.col("o_orderkey"), F.lit(3)) == r
         ).repartition(1).sortWithinPartitions("o_orderkey")
         tx_append_tracked(batch, path)
-    if not tx_snapshot(path)["files"]:
-        return spark.createDataFrame([], empty_schema)
     tx_delete_range_dv(spark, path, "o_custkey", 2, 400)
     tx_compact(spark, path, target_bytes=1 << 30)
     t = tx_read_tracked(spark, path)
@@ -2314,29 +2042,16 @@ def q_tx_keyless_cdc_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     report every update as delete+insert and every OPTIMIZE as full
     churn — the difference between an incremental MERGE consumer
     reading O(changes) and re-reading the table."""
-    import shutil
-
     from pulsar_project_spark.sources.tables import load_table
     from pulsar_project_spark.sources.txlog import (
         tx_append_tracked,
         tx_changes_by_rid,
         tx_delete_range_dv,
-        tx_init,
         tx_latest_version,
-        tx_snapshot,
         tx_update,
     )
 
-    empty_schema = StructType([
-        StructField("change_type", StringType()),
-        StructField("n_rows", LongType()),
-        StructField("total_cents", LongType()),
-        StructField("sum_rid", LongType()),
-    ])
-    path = _rt_path("txlog_keyless_cdc")
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    tx_init(path)
+    path = _fresh_tx_table("txlog_keyless_cdc")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey",
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"))
@@ -2345,8 +2060,6 @@ def q_tx_keyless_cdc_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.pmod(F.col("o_orderkey"), F.lit(3)) == r
         ).repartition(1).sortWithinPartitions("o_orderkey")
         tx_append_tracked(batch, path, stat_cols=["o_custkey"])
-    if not tx_snapshot(path)["files"]:
-        return spark.createDataFrame([], empty_schema)
     v_from = tx_latest_version(path)
     tx_update(spark, path, "o_custkey", 100, 400, {"cents": "cents * 2 + 5"})
     tx_delete_range_dv(spark, path, "o_custkey", 2, 150)
@@ -2407,41 +2120,21 @@ def q_tx_generated_column_census(spark: SparkSession,
     what keeps those queries planning-time prunable WITHOUT asking
     users to rewrite predicates, and declaring the generator costs
     zero data movement."""
-    import shutil
-
     from pulsar_project_spark.sources.txlog import (
         tx_append_clustered,
-        tx_init,
         tx_read_pruned,
         tx_set_generated,
-        tx_snapshot,
     )
 
-    empty_schema = StructType([
-        StructField("event_type", StringType()),
-        StructField("n_events", LongType()),
-        StructField("total_cents", LongType()),
-        StructField("sum_day", LongType()),
-    ])
-    path = _rt_path("txlog_generated")
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    tx_init(path)
+    path = _fresh_tx_table("txlog_generated")
     tx_set_generated(path, "day", "ts_us", _GEN_DAY_US)
     ev = load_events(spark, sf_dir).select(
         "event_type", "ts_us",
         F.round(F.col("value") * 100).cast("bigint").alias("value_cents"),
     )
     tx_append_clustered(ev, path, ["day"], n_files=4)
-    if not tx_snapshot(path)["files"]:
-        return spark.createDataFrame([], empty_schema)
-    try:
-        pruned, _n_read, _n_total = tx_read_pruned(
-            spark, path, "ts_us", _GEN_TS_LO, _GEN_TS_HI)
-    except ValueError:
-        # derived bounds PROVED no file intersects the window — a valid
-        # outcome for a corpus living entirely outside it
-        return spark.createDataFrame([], empty_schema)
+    pruned, _n_read, _n_total = tx_read_pruned(
+        spark, path, "ts_us", _GEN_TS_LO, _GEN_TS_HI)
     return pruned.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum("value_cents").alias("total_cents"),
@@ -2500,44 +2193,24 @@ def q_tx_generated_dml_census(spark: SparkSession,
     Scale shape: identical to ``tx_generated_column_census`` plus one
     bounded copy-on-write rewrite (manifest bounds pick the overlapping
     files; kept files carry by name)."""
-    import shutil
-
     from pulsar_project_spark.sources.txlog import (
         tx_append_clustered,
-        tx_init,
         tx_read_pruned,
         tx_set_generated,
-        tx_snapshot,
         tx_update,
     )
 
-    empty_schema = StructType([
-        StructField("event_type", StringType()),
-        StructField("n_events", LongType()),
-        StructField("total_cents", LongType()),
-        StructField("sum_day", LongType()),
-    ])
-    path = _rt_path("txlog_gen_dml")
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    tx_init(path)
+    path = _fresh_tx_table("txlog_gen_dml")
     tx_set_generated(path, "day", "ts_us", _GEN_DAY_US)
     ev = load_events(spark, sf_dir).select(
         "event_type", "ts_us",
         F.round(F.col("value") * 100).cast("bigint").alias("value_cents"),
     )
     tx_append_clustered(ev, path, ["day"], n_files=4)
-    if not tx_snapshot(path)["files"]:
-        return spark.createDataFrame([], empty_schema)
     tx_update(spark, path, "ts_us", _GEN_MOVE_LO, _GEN_MOVE_HI,
               {"ts_us": f"ts_us + {_GEN_MOVE_DELTA}"})
-    try:
-        pruned, _n_read, _n_total = tx_read_pruned(
-            spark, path, "ts_us", _GEN_DEST_LO, _GEN_DEST_HI)
-    except ValueError:
-        # derived bounds PROVED no file intersects the destination — a
-        # valid outcome for a corpus living entirely outside it
-        return spark.createDataFrame([], empty_schema)
+    pruned, _n_read, _n_total = tx_read_pruned(
+        spark, path, "ts_us", _GEN_DEST_LO, _GEN_DEST_HI)
     return pruned.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum("value_cents").alias("total_cents"),
@@ -2598,28 +2271,15 @@ def q_tx_datasource_read_census(spark: SparkSession,
     split per live file; the Arrow data plane streams record batches.
     Production consumers wanting JVM-side throughput use tx_read* —
     twin tests pin the semantics equal. See ``sources/tx_batch.py``."""
-    import shutil
-
     from pulsar_project_spark.sources.tables import load_table
     from pulsar_project_spark.sources.tx_batch import TxTableDataSource
     from pulsar_project_spark.sources.txlog import (
         tx_append_tracked,
         tx_compact,
         tx_delete_range_dv,
-        tx_init,
-        tx_snapshot,
     )
 
-    empty_schema = StructType([
-        StructField("bucket", LongType()),
-        StructField("n_rows", LongType()),
-        StructField("sum_rid", LongType()),
-        StructField("sum_custkey", LongType()),
-    ])
-    path = _rt_path("txlog_datasource")
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    tx_init(path)
+    path = _fresh_tx_table("txlog_datasource")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey")
     for r in (0, 1, 2):
@@ -2627,8 +2287,6 @@ def q_tx_datasource_read_census(spark: SparkSession,
             F.pmod(F.col("o_orderkey"), F.lit(3)) == r
         ).repartition(1).sortWithinPartitions("o_orderkey")
         tx_append_tracked(batch, path, stat_cols=["o_custkey"])
-    if not tx_snapshot(path)["files"]:
-        return spark.createDataFrame([], empty_schema)
     tx_delete_range_dv(spark, path, "o_custkey", 2, 400)
     tx_compact(spark, path, target_bytes=1 << 30)
     spark.dataSource.register(TxTableDataSource)
@@ -2694,35 +2352,20 @@ def q_tx_datasource_write_census(spark: SparkSession,
     Scale shape: per-task staging is embarrassingly parallel; commit
     cost is one manifest link regardless of data size; the read side
     plans from metadata. See ``sources/tx_batch.py``."""
-    import shutil
-
     from pulsar_project_spark.sources.tables import load_table
     from pulsar_project_spark.sources.tx_batch import TxTableDataSource
     from pulsar_project_spark.sources.txlog import (
         tx_append_tracked,
-        tx_init,
         tx_set_constraint,
-        tx_snapshot,
     )
 
-    empty_schema = StructType([
-        StructField("bucket", LongType()),
-        StructField("n_rows", LongType()),
-        StructField("sum_rid", LongType()),
-        StructField("sum_custkey", LongType()),
-    ])
-    path = _rt_path("txlog_ds_write")
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    tx_init(path)
+    path = _fresh_tx_table("txlog_ds_write")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey")
     b0 = orders.filter(
         F.pmod(F.col("o_orderkey"), F.lit(2)) == 0
     ).repartition(1).sortWithinPartitions("o_orderkey")
     tx_append_tracked(b0, path, stat_cols=["o_custkey"])
-    if not tx_snapshot(path)["files"]:
-        return spark.createDataFrame([], empty_schema)
     tx_set_constraint(spark, path, "custkey_domain",
                       "o_custkey IS NULL OR o_custkey >= 0")
     b1 = orders.filter(

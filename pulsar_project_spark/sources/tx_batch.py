@@ -96,35 +96,80 @@ class _TxFileSplit(InputPartition):
         self.arrow_types = arrow_types
 
 
-def _logical_schema(table: str, snap: dict) -> list[tuple[str, str]]:
-    """Ordered (logical column, SQL type) pairs of a snapshot: the
-    manifest-recorded physical schema union resolved through the
-    rename chain, drops removed, widen types applied, the internal
-    ``_rid`` hidden (it is surfaced separately via withRowIds).
-    First occurrence wins, so a renamed column keeps its original
-    position — stable schema across mapping debt."""
-    from pulsar_project_spark.sources.txlog import (
-        _physical_schema_map,
-        _resolve_to_logical,
-    )
+def _read_tx_file(table: str, name: str, dv_name: str | None,
+                  columns: list[str], chain: list, arrow_types: dict,
+                  extra: tuple = ()):
+    """Stream ONE tx data file as Arrow record batches under the logical
+    schema — the data plane both Python sources share (this batch source
+    and the ``tx_change_feed`` stream). Yields ``(arrays, positions,
+    batch)`` per non-empty batch: ``arrays`` holds one array per
+    logical column in ``columns``, read from the newest physical
+    ancestor this generation carries (``txlog._physical_ancestors``
+    over the rename ``chain``), cast to its ``arrow_types`` alias
+    (narrow pre-widen generations — the same semantics as the JVM
+    reader's explicit widened schema), or typed nulls when the
+    generation predates the column (ADD COLUMN semantics);
+    ``positions`` the surviving rows' original row positions, after the
+    deletion-vector mask in ``dv_name`` is applied as a vectorized
+    position filter; ``batch`` the masked physical batch, which also
+    carries the ``extra`` physical columns."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as papq
 
-    chain = snap.get("renames", [])
-    drops = set(snap.get("drops", []))
-    types = snap.get("types", {})
-    out: list[tuple[str, str]] = []
-    seen: set[str] = set()
-    for phys, ts in _physical_schema_map(table, snap).items():
-        lc = _resolve_to_logical(phys, chain)
-        if lc in drops or lc == _RID or lc in seen:
+    from pulsar_project_spark.sources.txlog import _physical_ancestors
+
+    masked = None  # sorted numpy array of masked row positions
+    if dv_name:
+        dv = papq.read_table(os.path.join(table, dv_name),
+                             columns=["file", "pos"])
+        sub = dv.filter(pc.equal(dv.column("file"), name))
+        masked = np.sort(
+            sub.column("pos").to_numpy(zero_copy_only=False)
+            .astype(np.int64))
+        if masked.size == 0:
+            masked = None
+    pf = papq.ParquetFile(os.path.join(table, name))
+    phys_names = set(pf.schema_arrow.names)
+    colmap = [
+        (next((a for a in _physical_ancestors(c, chain) if a in phys_names),
+              None),
+         pa.type_for_alias(arrow_types[c]) if c in arrow_types else None)
+        for c in columns
+    ]
+    read_cols = sorted({p for p, _ in colmap if p is not None} | set(extra))
+    if not read_cols:
+        # no requested column exists physically: scan one column anyway
+        # purely for the row count (all outputs are nulls)
+        read_cols = [pf.schema_arrow.names[0]]
+    pos = 0
+    for batch in pf.iter_batches(columns=read_cols):
+        n = batch.num_rows
+        positions = np.arange(pos, pos + n, dtype=np.int64)
+        if masked is not None:
+            positions = positions[~np.isin(positions, masked)]
+            batch = batch.take(pa.array(positions - pos, pa.int64()))
+        pos += n
+        m = batch.num_rows
+        if m == 0:
             continue
-        seen.add(lc)
-        out.append((lc, types.get(lc, ts)))
-    return out
+        arrays = []
+        for p, want in colmap:
+            if p is None:
+                arrays.append(pa.nulls(m, want or pa.null()))
+                continue
+            arr = batch.column(batch.schema.get_field_index(p))
+            if want is not None and arr.type != want:
+                arr = arr.cast(want)
+            arrays.append(arr)
+        yield arrays, positions, batch
 
 
 class TxTableReader(DataSourceReader):
     def __init__(self, options):
         from pulsar_project_spark.sources.txlog import (
+            _logical_schema,
             tx_snapshot,
             tx_version_as_of_timestamp,
         )
@@ -231,75 +276,20 @@ class TxTableReader(DataSourceReader):
     def read(self, split: _TxFileSplit):
         if split is None or not split.name:
             return
-        import numpy as np
         import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as papq
 
-        masked = None
-        if split.dv_name:
-            dv = papq.read_table(
-                os.path.join(split.table, split.dv_name),
-                columns=["file", "pos"])
-            sub = dv.filter(pc.equal(dv.column("file"), split.name))
-            masked = np.sort(
-                sub.column("pos").to_numpy(zero_copy_only=False)
-                .astype(np.int64))
-            if masked.size == 0:
-                masked = None
-        pf = papq.ParquetFile(os.path.join(split.table, split.name))
-        phys_names = set(pf.schema_arrow.names)
-        colmap: list[tuple[str, str | None]] = []
-        for c in split.columns:
-            anc = [c]
-            seen = {c}
-            for old, new in reversed(split.chain):
-                if new in seen and old not in seen:
-                    anc.append(old)
-                    seen.add(old)
-            colmap.append(
-                (c, next((a for a in anc if a in phys_names), None)))
-        read_cols = sorted({p for _, p in colmap if p is not None})
-        materialized_rids = (split.with_rids and split.rid_base is None)
-        if materialized_rids:
-            read_cols = sorted(set(read_cols) | {_RID})
-        if not read_cols:
-            read_cols = [pf.schema_arrow.names[0]]
+        materialized_rids = split.with_rids and split.rid_base is None
         names = split.columns + ([_RID] if split.with_rids else [])
-        pos = 0
-        for batch in pf.iter_batches(columns=read_cols):
-            n = batch.num_rows
-            orig = np.arange(pos, pos + n, dtype=np.int64)
-            if masked is not None:
-                keep_orig = orig[~np.isin(orig, masked)]
-                batch = batch.take(
-                    pa.array(keep_orig - pos, pa.int64()))
-            else:
-                keep_orig = orig
-            pos += n
-            m = batch.num_rows
-            if m == 0:
-                continue
-            arrays = []
-            for c, p in colmap:
-                if p is not None:
-                    arr = batch.column(batch.schema.get_field_index(p))
-                    want = split.arrow_types.get(c)
-                    if want is not None and str(arr.type) != want:
-                        arr = arr.cast(pa.type_for_alias(want))
-                    arrays.append(arr)
-                else:
-                    want = split.arrow_types.get(c)
-                    arrays.append(pa.nulls(
-                        m, pa.type_for_alias(want) if want else pa.null()))
-            if split.with_rids:
-                if materialized_rids:
-                    arrays.append(batch.column(
-                        batch.schema.get_field_index(_RID)).cast(
-                        pa.int64()))
-                else:
-                    arrays.append(pa.array(
-                        split.rid_base + keep_orig, pa.int64()))
+        for arrays, positions, batch in _read_tx_file(
+                split.table, split.name, split.dv_name, split.columns,
+                split.chain, split.arrow_types,
+                extra=(_RID,) if materialized_rids else ()):
+            if materialized_rids:
+                arrays.append(batch.column(
+                    batch.schema.get_field_index(_RID)).cast(pa.int64()))
+            elif split.with_rids:
+                arrays.append(pa.array(split.rid_base + positions,
+                                       pa.int64()))
             yield pa.RecordBatch.from_arrays(arrays, names=names)
 
 

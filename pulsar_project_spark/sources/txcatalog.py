@@ -53,6 +53,10 @@ from pulsar_project_spark.sources.txlog import (
 )
 
 _MANIFEST_DIR = "_manifests"
+# version slots a branch commit tries past the table's latest before
+# giving up, and catalog CAS races a move redoes before giving up
+_BRANCH_SLOTS = 16
+_MOVE_RETRIES = 5
 
 
 def _catalog_manifest_path(catalog: str, version: int) -> str:
@@ -135,7 +139,7 @@ def catalog_init(catalog: str, tables: dict[str, str]) -> None:
 
 
 def _commit_branch(table: str, parent: int, files: list[str],
-                   op: str, max_retries: int = 16) -> int:
+                   op: str) -> int:
     """Commit ``files`` as a new version whose recorded LINEAGE is
     ``parent`` but whose version NUMBER is the next free one — the
     allocator a catalog-managed table needs: a concurrent writer that
@@ -147,7 +151,7 @@ def _commit_branch(table: str, parent: int, files: list[str],
     base = tx_latest_version(table)
     if base is None:
         raise ValueError(f"not a tx table: {table}")
-    for attempt in range(max_retries):
+    for attempt in range(_BRANCH_SLOTS):
         try:
             # the manifest's recorded parent is the ALLOCATION slot;
             # the true lineage rides in the txn field for audit —
@@ -158,11 +162,11 @@ def _commit_branch(table: str, parent: int, files: list[str],
         except TxConflict:
             continue
         return v
-    raise TxConflict(f"branch commit lost {max_retries} races in {table}")
+    raise TxConflict(f"branch commit lost {_BRANCH_SLOTS} races in {table}")
 
 
 def catalog_move(spark: SparkSession, catalog: str, src: str, dst: str,
-                 predicate, max_retries: int = 5) -> int:
+                 predicate) -> int:
     """Atomically MOVE the rows matching ``predicate`` (a Column) from
     table ``src`` to table ``dst``: one cross-table transaction — no
     catalog reader ever sees the moved rows in both tables or in
@@ -171,7 +175,7 @@ def catalog_move(spark: SparkSession, catalog: str, src: str, dst: str,
     Scale shape: the data plane is one read of src + two writes (the
     survivors, the movers); the atomicity costs only metadata — two
     staged table manifests and one catalog CAS."""
-    for _ in range(max_retries):
+    for _ in range(_MOVE_RETRIES):
         csnap = catalog_snapshot(catalog)
         (src_dir, src_v) = csnap["tables"][src]
         (dst_dir, dst_v) = csnap["tables"][dst]
@@ -203,14 +207,16 @@ def catalog_move(spark: SparkSession, catalog: str, src: str, dst: str,
                                    op="move")
         except TxConflict:
             continue  # somebody moved first: redo from THEIR snapshot
-    raise TxConflict(f"move lost {max_retries} catalog races in {catalog}")
+    raise TxConflict(f"move lost {_MOVE_RETRIES} catalog races in {catalog}")
 
 
 def catalog_read(spark: SparkSession, catalog: str, name: str,
                  version: int | None = None):
     """Read table ``name`` exactly as the catalog snapshot pins it.
-    Returns (DataFrame | None, n_files) — None for a 0-file table (the
-    caller supplies the schema-correct empty frame if needed). Reads
+    Returns (DataFrame, n_files); a 0-file table reads as the 0-row
+    relation under its recorded schema (``txlog.tx_read``'s rule), and
+    a table registered but never written as the 0-row relation with no
+    columns — an empty tier is a normal catalog state. Reads
     through the FULL tx read path (round-9 fix: the raw parquet read
     ignored deletion vectors and column mapping, so a catalog-managed
     table with a DV delete resurrected masked rows and a renamed one
@@ -221,8 +227,10 @@ def catalog_read(spark: SparkSession, catalog: str, name: str,
     tdir, tv = csnap["tables"][name]
     snap = tx_snapshot(tdir, tv)
     files = snap["files"]
-    if not files:
-        return None, 0
+    if not files and not snap.get("schema"):
+        from pyspark.sql.types import StructType
+
+        return spark.createDataFrame([], StructType([])), 0
     return _read_files_masked(spark, tdir, snap, files), len(files)
 
 

@@ -372,9 +372,12 @@ def _read_files_masked(spark: SparkSession, table: str, snap: dict,
     deleted row position) and broadcasts; the data side never
     rewrites — exactly the read-time half of Delta deletion vectors.
     ``merge_schema`` unions the file generations' schemas (SCHEMA
-    EVOLUTION — see ``tx_read``)."""
+    EVOLUTION — see ``tx_read``). No ``names``: the snapshot's empty
+    relation (``_empty_read``)."""
     from pyspark.sql import functions as F
 
+    if not names:
+        return _empty_read(spark, table, snap)
     chain = snap.get("renames", [])
     drops = snap.get("drops", [])
     if chain or drops:
@@ -455,10 +458,12 @@ def tx_read(spark: SparkSession, table: str,
     (parquet mergeSchema), so the widened schema is the union of all
     generations' columns; widening is append-shaped (new columns), not
     renames — a rename is a new column plus a backfill, exactly as the
-    real systems treat it."""
+    real systems treat it.
+
+    A snapshot with no files reads as a 0-row relation under its
+    recorded logical schema; only a table never written (no files, no
+    recorded schema) raises ``ValueError``."""
     snap = tx_snapshot(table, version)
-    if not snap["files"]:
-        raise ValueError(f"version {snap['version']} of {table} is empty")
     return _read_files_masked(spark, table, snap, snap["files"],
                               merge_schema=merge_schema)
 
@@ -903,14 +908,46 @@ def _physical_schema_map(table: str, snap: dict,
     return out
 
 
-def _logical_columns(table: str, snap: dict) -> set[str]:
-    """The snapshot's CURRENT logical column names: the physical schema
-    union (manifest-recorded, footer fallback), resolved through the
-    rename chain, minus the drop list."""
+def _logical_schema(table: str, snap: dict) -> list[tuple[str, str]]:
+    """Ordered (logical column, SQL type) pairs of a snapshot: the
+    physical schema union (manifest-recorded, footer fallback) resolved
+    through the rename chain, drops removed, widen types applied, the
+    internal ``_rid`` hidden (only the tracked view surfaces it). First
+    occurrence wins, so a renamed column keeps its original position —
+    stable schema across mapping debt."""
     chain = snap.get("renames", [])
     drops = set(snap.get("drops", []))
-    phys = _physical_schema_map(table, snap)
-    return {_resolve_to_logical(c, chain) for c in phys} - drops
+    types = snap.get("types", {})
+    out: list[tuple[str, str]] = []
+    seen: set[str] = set()
+    for phys, ts in _physical_schema_map(table, snap).items():
+        lc = _resolve_to_logical(phys, chain)
+        if lc in drops or lc == _RID or lc in seen:
+            continue
+        seen.add(lc)
+        out.append((lc, types.get(lc, ts)))
+    return out
+
+
+def _logical_columns(table: str, snap: dict) -> set[str]:
+    """The snapshot's CURRENT logical column names (``_logical_schema``)."""
+    return {c for c, _ in _logical_schema(table, snap)}
+
+
+def _empty_read(spark: SparkSession, table: str, snap: dict) -> DataFrame:
+    """What a read of zero files returns: a 0-row relation under the
+    snapshot's logical schema — an empty table, or a read pruned to
+    nothing, is an empty relation, not an error. Raises only when the
+    snapshot has neither files nor a recorded schema (a table
+    initialized but never written), where no schema exists to type the
+    relation with."""
+    pairs = _logical_schema(table, snap)
+    if not pairs:
+        raise ValueError(
+            f"version {snap['version']} of {table} has no files and no "
+            "recorded schema")
+    return spark.createDataFrame(
+        [], ", ".join(f"`{c}` {t}" for c, t in pairs))
 
 
 def _file_bounds(file_stats: dict, col: str, chain: list):
@@ -940,7 +977,9 @@ def tx_read_pruned(spark: SparkSession, table: str, col: str,
     recorded bounds are conservatively kept. Returns
     (DataFrame-with-the-residual-filter-applied, n_files_read,
     n_files_total); correctness never depends on the stats — the
-    residual filter re-applies the predicate exactly."""
+    residual filter re-applies the predicate exactly. When the bounds
+    prove no file can match, the DataFrame is the snapshot's 0-row
+    relation and ``n_files_read`` is 0."""
     snap = tx_snapshot(table, version)
     stats = snap.get("stats", {})
     chain = snap.get("renames", [])
@@ -976,11 +1015,6 @@ def tx_read_pruned(spark: SparkSession, table: str, col: str,
                 break
         if not skip:
             chosen.append(name)
-    if not chosen:
-        raise ValueError(
-            f"no file of {table} v{snap['version']} can contain "
-            f"{col} in [{lo}, {hi}]"
-        )
     from pyspark.sql import functions as F
 
     df = _read_files_masked(spark, table, snap, chosen)
@@ -1573,7 +1607,9 @@ def tx_table_changes(spark: SparkSession, table: str,
     files resolves the weights — the touched files, not the table, so
     a targeted delete's feed costs what the delete cost, not a full
     scan. Needs the manifests of ``v_from..v_to`` to survive vacuum
-    (same horizon as time travel; raises if the chain is broken).
+    (same horizon as time travel; raises if the chain is broken). A
+    window without a data-changing commit yields a 0-row feed with the
+    same columns.
 
     Composes with ``retractable_agg_view_census``'s fold to maintain
     any linear aggregate view incrementally off storage, and with the
@@ -1615,15 +1651,16 @@ def tx_table_changes(spark: SparkSession, table: str,
         if removed or dv_changed:
             sides.append((prev, removed + dv_changed, -1, v))
         prev = cur
-    if not sides:
-        raise ValueError(
-            f"no data-changing commits in {table} ({v_from}, {v_to}]")
-    parts = []
     # a feed window crossing a RENAME or DROP COLUMN commit mixes
     # generations read under different mappings — present every side
     # under the FINAL (v_to) logical schema, the Delta CDF convention
     # (idempotent for sides already resolved under a prefix)
     final_snap = tx_snapshot(table, v_to)
+    if not sides:
+        # no data-changing commit in the window: one file-less side
+        # types the 0-row feed with the final schema
+        sides.append((final_snap, [], 1, v_to))
+    parts = []
     final_chain = final_snap.get("renames", [])
     final_drops = final_snap.get("drops", [])
     for snap, names, w, v in sides:
@@ -1684,7 +1721,8 @@ def tx_typed_changes(spark: SparkSession, table: str, key_col: str,
     same as the weighted one at any scale. Keys are assumed unique per
     snapshot (the ``tx_merge_upsert`` precondition); under duplicate
     keys the label degrades to 'both sides present → update' without
-    pairing individual rows, which is the honest relational answer."""
+    pairing individual rows, which is the honest relational answer.
+    An empty window is a 0-row feed, as in ``tx_table_changes``."""
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
@@ -1870,9 +1908,10 @@ def tx_read_bloom_point(spark: SparkSession, table: str, col: str,
     file is opened only if its bloom says SOME probe value may be
     present (files without a bloom — pre-index generations, compaction
     outputs — are conservatively kept). Returns (DataFrame-with-the-
-    exact-IN-filter-applied, n_files_read, n_files_total); raises
-    ``ValueError`` when every file PROVABLY lacks every probe value
-    (the ``tx_read_pruned`` convention). Planning cost is pure driver
+    exact-IN-filter-applied, n_files_read, n_files_total); when every
+    file PROVABLY lacks every probe value the DataFrame is the
+    snapshot's 0-row relation and ``n_files_read`` is 0 (the
+    ``tx_read_pruned`` convention). Planning cost is pure driver
     arithmetic on manifest metadata — zero storage I/O for skipped
     files, which at 100 TB is the entire point of a needle query."""
     from pyspark.sql import functions as F
@@ -1913,10 +1952,6 @@ def tx_read_bloom_point(spark: SparkSession, table: str, col: str,
                 break
         if maybe:
             chosen.append(name)
-    if not chosen:
-        raise ValueError(
-            f"no file of {table} v{snap['version']} can contain "
-            f"{col} in {vs}")
     df = _read_files_masked(spark, table, snap, chosen)
     return (df.filter(F.col(col).isin(vs)),
             len(chosen), len(snap["files"]))
@@ -2677,9 +2712,13 @@ def _read_tracked_files(spark: SparkSession, table: str, snap: dict,
     scan, so an id is always computed from the physical position the
     mask addresses. Raises if any file lacks tracking metadata (it was
     written by an untracked op — the loud error beats a silent NULL id).
+    No ``names``: the snapshot's empty relation with ``_rid``.
     """
     from pyspark.sql import functions as F
 
+    if not names:
+        return _empty_read(spark, table, snap).withColumn(
+            _RID, F.lit(None).cast("bigint"))
     rids = snap.get("rids", {})
     untracked = [n for n in names if n not in rids]
     if untracked:
@@ -2738,10 +2777,9 @@ def tx_read_tracked(spark: SparkSession, table: str,
     vectors applied, renames/drops/widening resolved as in ``tx_read``).
     Ids are stable across DV deletes (positions never shift — the mask
     is read-time) and across compaction (the rewrite materializes them,
-    see ``tx_compact``); they are never reused after a delete."""
+    see ``tx_compact``); they are never reused after a delete. Empty
+    snapshots read as in ``tx_read``."""
     snap = tx_snapshot(table, version)
-    if not snap["files"]:
-        raise ValueError(f"version {snap['version']} of {table} is empty")
     return _read_tracked_files(spark, table, snap, snap["files"])
 
 
@@ -2769,7 +2807,8 @@ def tx_changes_by_rid(spark: SparkSession, table: str,
 
     Both sides present under the FINAL (v_to) logical schema (renames
     folded forward, drops removed, added columns NULL on the old side
-    — the Delta CDF convention, same as ``tx_typed_changes``).
+    — the Delta CDF convention, same as ``tx_typed_changes``); a
+    file-less side is the empty relation under that schema.
 
     Scale shape: one shuffle join on ``_rid`` (unique, dense integer —
     no skew by construction); the column comparison is a null-safe
@@ -2784,20 +2823,15 @@ def tx_changes_by_rid(spark: SparkSession, table: str,
     final_drops = snap_to.get("drops", [])
 
     def _side(snap):
-        if not snap["files"]:
-            return None
-        df = _read_tracked_files(spark, table, snap, snap["files"])
+        # a file-less side is the empty relation under the final schema
+        df = _read_tracked_files(spark, table,
+                                 snap if snap["files"] else snap_to,
+                                 snap["files"])
         df = _apply_renames(df, final_chain)
         gone = [c for c in final_drops if c in df.columns and c != _RID]
         return df.drop(*gone) if gone else df
 
     old, new = _side(snap_from), _side(snap_to)
-    if old is None and new is None:
-        raise ValueError(f"both versions of {table} are empty")
-    if old is None:
-        old = new.limit(0)
-    if new is None:
-        new = old.limit(0)
     # added columns read as NULL on the generation that predates them
     for c in new.columns:
         if c not in old.columns:

@@ -871,7 +871,6 @@ def run_streaming_tx_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         tx_append_txn,
         tx_init,
         tx_read,
-        tx_snapshot,
     )
 
     base = os.path.join(
@@ -898,13 +897,6 @@ def run_streaming_tx_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         tx_append_txn(bdf, table, app=app, batch=batch_id, n_files=4)
 
     _drain(proj, ckpt, mode="append", sink=sink)
-    if not tx_snapshot(table)["files"]:
-        return spark.createDataFrame([], StructType([
-            StructField("event_type", StringType()),
-            StructField("n_events", LongType()),
-            StructField("total_cents", LongType()),
-            StructField("last_us", LongType()),
-        ]))
     return tx_read(spark, table).groupBy("event_type").agg(
         F.count("*").alias("n_events"),
         F.sum("value_cents").alias("total_cents"),
@@ -1268,7 +1260,6 @@ def run_streaming_tx_change_feed(spark: SparkSession, sf_dir: str
         tx_append_txn,
         tx_init,
         tx_read,
-        tx_snapshot,
     )
 
     table = _build_cdf_table(spark, sf_dir, "txlog_cdf_stream")
@@ -1316,16 +1307,6 @@ def run_streaming_tx_change_feed(spark: SparkSession, sf_dir: str
                       n_files=1)
 
     _drain(feed, ckpt, mode="append", sink=sink)
-    if not tx_snapshot(state)["files"]:
-        from pyspark.sql.types import (
-            LongType, StringType, StructField, StructType,
-        )
-        return spark.createDataFrame([], StructType([
-            StructField("change_type", StringType()),
-            StructField("event_type", StringType()),
-            StructField("n_rows", LongType()),
-            StructField("total_cents", LongType()),
-        ]))
     return tx_read(spark, state).groupBy("change_type", "event_type").agg(
         F.sum("n_rows").cast("bigint").alias("n_rows"),
         F.sum("total_cents").cast("bigint").alias("total_cents"),
@@ -1427,7 +1408,6 @@ def run_streaming_tx_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
         tx_append_txn,
         tx_init,
         tx_read,
-        tx_snapshot,
     )
 
     table = _build_mv_table(spark, sf_dir)
@@ -1469,15 +1449,6 @@ def run_streaming_tx_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
                       n_files=1)
 
     _drain(feed, ckpt, mode="append", sink=sink)
-    if not tx_snapshot(state)["files"]:
-        from pyspark.sql.types import (
-            LongType, StringType, StructField, StructType,
-        )
-        return spark.createDataFrame([], StructType([
-            StructField("event_type", StringType()),
-            StructField("n_events", LongType()),
-            StructField("total_cents", LongType()),
-        ]))
     return (
         tx_read(spark, state).groupBy("event_type")
         .agg(F.sum("n").cast("bigint").alias("n_events"),
@@ -1510,7 +1481,6 @@ def run_streaming_tx_tracked_sink(spark: SparkSession, sf_dir: str
         tx_append_tracked_txn,
         tx_init,
         tx_read_tracked,
-        tx_snapshot,
     )
 
     base = os.path.join(
@@ -1535,14 +1505,6 @@ def run_streaming_tx_tracked_sink(spark: SparkSession, sf_dir: str
                               n_files=4)
 
     _drain(proj, ckpt, mode="append", sink=sink)
-    empty = StructType([
-        StructField("event_type", StringType()),
-        StructField("n_events", LongType()),
-        StructField("total_cents", LongType()),
-        StructField("last_us", LongType()),
-    ])
-    if not tx_snapshot(table)["files"]:
-        return spark.createDataFrame([], empty)
     t = tx_read_tracked(spark, table)
     census = t.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),

@@ -148,3 +148,14 @@ def test_starting_timestamp_option_resolves_version(spark):
     q.awaitTermination()
     # only the COW delete (v3) is after the resolved start version
     assert sorted(out) == sorted((3, i, -1) for i in range(10))
+
+
+def test_latest_offset_on_a_non_tx_directory_names_the_table(tmp_path):
+    from pulsar_project_spark.sources.cdf_stream import (
+        TxChangeFeedStreamReader,
+    )
+
+    reader = TxChangeFeedStreamReader(
+        {"tableDir": str(tmp_path), "columns": "id"})
+    with pytest.raises(ValueError, match="not a tx table"):
+        reader.latestOffset()

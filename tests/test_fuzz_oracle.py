@@ -251,7 +251,8 @@ _EVENTS_FUZZED = (
     # round-9 continuation: generated columns under fuzz — NULL ts rows
     # generate NULL days (clustered to one range partition), and the
     # 18-day 2024 span straddles the census window's edge so both the
-    # proved-empty ValueError branch and partial overlaps are hit
+    # proved-empty read (every file pruned: the typed 0-row relation)
+    # and partial overlaps are hit
     "tx_generated_column_census",
     # round-10: generated-column maintenance under an UPDATE that moves
     # the base — fuzz hits the no-match move window (no-commit branch),
@@ -266,13 +267,15 @@ _EVENTS_FUZZED = (
     "retractable_agg_view_census",
     # round-7: both catalog transactions under fuzz timestamps (18-day
     # span crosses both cut instants; single-sided corpora leave one
-    # tier empty — the 0-file catalog_read branch)
+    # tier with 0 rows — its schema-only staged file reads as the typed
+    # 0-row relation)
     "tx_catalog_atomic_move_census",
     # round-7: vacuum after compaction under fuzz corpora (single-file
     # buckets -> nothing reclaimed; the degenerate-reclaim branch)
     "tx_vacuum_reclaim_census",
     # round-7: mixed-spec generations under fuzz (18-day span straddles
-    # the pruned week; all-outside corpora hit the proved-empty branch)
+    # the pruned week; all-outside corpora prune every file and read
+    # the typed 0-row relation)
     "tx_partition_evolution_census",
     "keep_last_n_per_user",
     "latest_event_per_user",

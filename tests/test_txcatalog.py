@@ -182,7 +182,8 @@ def test_catalog_read_requires_catalog(spark, tmp_path):
         catalog_snapshot(str(tmp_path / "nope"))
 
 
-def test_concurrent_movers_serialize_via_catalog_cas(spark, tmp_path):
+def test_concurrent_movers_serialize_via_catalog_cas(spark, tmp_path,
+                                                   monkeypatch):
     """Two real threads moving DISJOINT slices concurrently: the
     catalog CAS forces one to redo from the other's snapshot; both
     must land, rows conserved, no double-move, catalog version
@@ -190,14 +191,16 @@ def test_concurrent_movers_serialize_via_catalog_cas(spark, tmp_path):
     cross-table transactions)."""
     import threading
 
+    import pulsar_project_spark.sources.txcatalog as tc
+
+    monkeypatch.setattr(tc, "_MOVE_RETRIES", 10)
     hot, cold, cat = _mk_pair(spark, tmp_path, n=200)
     errs = []
 
     def worker(lo, hi):
         try:
             catalog_move(spark, cat, "hot", "cold",
-                         (F.col("k") >= lo) & (F.col("k") < hi),
-                         max_retries=10)
+                         (F.col("k") >= lo) & (F.col("k") < hi))
         except Exception as exc:  # pragma: no cover - failure evidence
             errs.append(exc)
 

@@ -262,10 +262,11 @@ def test_manifest_stats_prune_skips_files_and_loses_nothing(spark, table):
     got = sorted(r["v"] for r in df.collect())
     want = sorted(i for i in range(64 * 64) if 3 <= i % 64 <= 6)
     assert got == want  # residual filter keeps it exact
-    # proven-empty range raises (no file can contain a = 1000)
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        tx_read_pruned(spark, table, "a", 1000, 2000)
+    # proven-empty range (no file can contain a = 1000): the bounds skip
+    # EVERY file, and the read is the typed 0-row relation
+    empty, n_none, n_all = tx_read_pruned(spark, table, "a", 1000, 2000)
+    assert (empty.count(), n_none, n_all) == (0, 0, n_total)
+    assert empty.dtypes == df.dtypes
 
 
 def test_delete_range_rewrites_only_overlapping_files(spark, table):
@@ -874,13 +875,21 @@ def test_bloom_point_lookup_skips_files_bounds_cannot(spark, table):
     out, n_read, n_total = tx_read_bloom_point(spark, table, "id", [1234])
     assert n_total == 8 and n_read < n_total, (n_read, n_total)
     assert [(r["id"], r["v"]) for r in out.collect()] == [(1234, 8638)]
-    # absent needle: with ~1% fpp per file, usually zero files survive;
-    # either way the result is exactly empty
-    try:
-        out2, n2, _ = tx_read_bloom_point(spark, table, "id", [99999])
-        assert out2.count() == 0 and n2 <= 2
-    except ValueError:
-        pass  # proved absent everywhere — the stronger outcome
+    # a needle every bloom proves absent (found by the same driver-side
+    # arithmetic the planner runs): zero files opened, and the lookup
+    # is the typed 0-row relation
+    from pulsar_project_spark.sources.txlog import _bloom_indexes
+
+    def maybe(bloom, value):
+        return all((bloom["words"][ix >> 6] >> (ix & 63)) & 1
+                   for ix in _bloom_indexes(value, bloom["bits"], bloom["k"]))
+
+    absent = next(
+        v for v in range(10**6, 10**6 + 10_000)
+        if not any(maybe(stats[n]["__bloom__id"], v) for n in snap["files"]))
+    out2, n2, n_total2 = tx_read_bloom_point(spark, table, "id", [absent])
+    assert (out2.count(), n2, n_total2) == (0, 0, 8)
+    assert out2.dtypes == out.dtypes
 
 
 def test_bloom_carries_through_kept_files_and_drops_on_rewrite(spark, table):
@@ -1703,3 +1712,52 @@ def test_widen_float_to_double_end_to_end(spark, table):
     # halves are exactly representable: float->double promotion is
     # value-exact, so the sum is bit-deterministic
     assert got.agg({"f": "sum"}).first()[0] == sum(i * 0.5 for i in range(8))
+
+
+# --- empty reads are empty relations -------------------------------------
+# A snapshot with no files (a restore to the initial version, a read the
+# stats prove empty, a feed window without data changes) reads as a
+# 0-row relation typed from the manifest's recorded schema; only a table
+# that was never written has no schema and raises.
+
+
+def test_restore_to_initial_version_reads_typed_empty(spark, table):
+    from pulsar_project_spark.sources.txlog import (
+        tx_append_tracked,
+        tx_read_tracked,
+        tx_restore,
+    )
+
+    tx_append(_mk(spark, 0, 10), table, n_files=2)
+    tx_restore(table, 0)
+    df = tx_read(spark, table)
+    assert df.count() == 0
+    assert df.dtypes == [("id", "bigint"), ("v", "bigint")]
+    # the tracked view of an empty snapshot carries the id column too
+    tracked = tempfile.mkdtemp(prefix="txlog_")
+    tx_init(tracked)
+    tx_append_tracked(_mk(spark, 0, 10), tracked)
+    tx_restore(tracked, 0)
+    t = tx_read_tracked(spark, tracked)
+    assert t.count() == 0
+    assert t.dtypes == [("id", "bigint"), ("v", "bigint"), ("_rid", "bigint")]
+
+
+def test_layout_only_feed_window_is_an_empty_feed(spark, table):
+    from pulsar_project_spark.sources.txlog import tx_table_changes
+
+    tx_append(_mk(spark, 0, 20), table, n_files=2)
+    tx_append(_mk(spark, 20, 40), table, n_files=2)
+    v_data = tx_latest_version(table)
+    tx_compact(spark, table, target_bytes=1 << 30)
+    assert tx_latest_version(table) > v_data
+    feed = tx_table_changes(spark, table, v_data)
+    assert feed.count() == 0
+    assert feed.dtypes == [
+        ("id", "bigint"), ("v", "bigint"), ("_commit_version", "int"),
+        ("_change_type", "string"), ("_n", "bigint")]
+
+
+def test_never_written_table_still_raises(spark, table):
+    with pytest.raises(ValueError, match="no recorded schema"):
+        tx_read(spark, table)
